@@ -18,13 +18,17 @@ Spark-first deviations (behavior-preserving, scale-motivated):
   instead of literal-embedded ``when`` chains (M6's idiomatic form —
   same arithmetic, but the plan stays data-independent);
 - multi-action sections are ``cache()``'d (the reference recomputes
-  lineage on every count/fit/agg — §4 anti-pattern).
+  lineage on every count/fit/agg — §4 anti-pattern);
+- the fit input gets a canonical layout set here, not by the session
+  (see ``classify_phases``), so the output is a function of the input
+  rows alone.
 
 Constants pinned to the reference (``src/combine_spark.py:25-32``).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -42,6 +46,9 @@ ML_K_CLUSTERS = 3
 ANOMALY_SIGMA = 2.0
 MIN_CENTROID_SEPARATION = 1.0
 ML_FEATURES = ("velocity", "baro_altitude", "vertical_rate")
+# Rows per partition of the canonical fit layout (see classify_phases);
+# any minute-sized batch is one partition.
+ROWS_PER_PARTITION = 1_000_000
 
 
 @dataclass
@@ -55,9 +62,9 @@ def classify_phases(df: DataFrame) -> tuple[DataFrame, PhaseModelInfo]:
     """Add flight_phase, flight_phase_id, is_anomaly, anomaly_score.
 
     Input needs the ML_FEATURES columns (nulls imputed to 0.0 first,
-    reference ``:193-195``). Returns (result, info). One fit + two
-    aggregations per batch; everything row-level is native
-    expressions over a broadcast centroid table.
+    reference ``:193-195``). Returns (result, info). One count, one
+    fit and two aggregations per batch; everything row-level is
+    native expressions over a broadcast centroid table.
     """
     import numpy as np
     from pyspark.ml import Pipeline
@@ -84,11 +91,18 @@ def classify_phases(df: DataFrame) -> tuple[DataFrame, PhaseModelInfo]:
         seed=42,
         maxIter=20,
     )
-    df = df.cache()  # fit + transform + stats re-traverse this plan
-    # try/finally: an exception anywhere below (fit, stats collect,
-    # threshold first) must still unpersist — foreachBatch RETRIES
-    # the batch and each retry would otherwise cache a fresh copy,
-    # accumulating blocks in the CacheManager (round-9 review).
+    # Canonical layout, set by the engine rather than the session:
+    # k-means|| seeds each partition by its index and samples in row
+    # order, so an inherited layout (shuffle partitions, AQE, cores)
+    # would change the model. Keyed and sorted on every column by name;
+    # the partition count depends on the row count alone. AQE never
+    # coalesces a cached plan, so n is also each K-Means pass's task
+    # count. Fit, transform, label stats and threshold read this frame.
+    cols = sorted(df.columns)
+    n = max(1, math.ceil(df.count() / ROWS_PER_PARTITION))
+    df = df.repartition(n, *cols).sortWithinPartitions(*cols).cache()
+    # try/finally: foreachBatch retries a failed batch, and each retry
+    # would otherwise leave a cached copy in the CacheManager.
     try:
         model = Pipeline(stages=[assembler, scaler, kmeans]).fit(df)
 
@@ -99,30 +113,13 @@ def classify_phases(df: DataFrame) -> tuple[DataFrame, PhaseModelInfo]:
                 max_dist = max(max_dist, float(np.linalg.norm(centers[i] - centers[j])))
         used_kmeans = max_dist >= MIN_CENTROID_SEPARATION
 
-        # M6 first, labels second (r14 reorder): the anomaly distance
-        # depends only on the cluster id + features, never on the
-        # phase labels, so transform → centroid join → distance can be
-        # a SINGLE localCheckpoint. The r13 shape checkpointed the
-        # transform, collected label stats, then checkpointed AGAIN
-        # after the distance column — materializing every row twice
-        # (at 100 TB, a second full-corpus write pass for nothing —
-        # guide §5). Outputs verified bit-identical across the
-        # reorder: the broadcast join is 1:1 (every row's cluster id
-        # hits the 3-row table), no repartitioning, so the label and
-        # threshold aggregations see the same rows in the same
-        # partition layout.
-        #
-        # localCheckpoint, not cache(): the label stats, threshold
-        # aggregate, and the caller's final action all reuse the blocks,
-        # and the ContextCleaner frees them once the result frame is
-        # dropped — cache() entries would leak in the CacheManager across
-        # repeated batch runs (streaming foreachBatch). Under AQE the
-        # checkpoint's stages run at this call — fine post-fit, the model
-        # already materialized its training passes.
-        #
-        # Centroid distance via a broadcast 3-row centroid table (same
-        # arithmetic as the reference's literal-embedded when-chains,
-        # src/combine_spark.py:332-362).
+        # M6 before M5: the distance to the own centroid needs only the
+        # cluster id, so transform → centroid join → distance is one
+        # localCheckpoint that the label stats, the threshold and the
+        # caller's action all reuse; the 1:1 broadcast join keeps the
+        # canonical layout. Centroids join as a broadcast 3-row table
+        # (the reference's literal when-chains,
+        # src/combine_spark.py:332-362, with the same arithmetic).
         scaler_model = model.stages[1]
         means = scaler_model.mean.toArray()
         stds = scaler_model.std.toArray()

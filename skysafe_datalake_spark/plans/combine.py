@@ -12,8 +12,8 @@ Dataflow (reference step numbers):
 
 Scale notes: the weather side is dimension-sized → always broadcast;
 flight-side skew is irrelevant (keys are unique per aircraft); the
-only unavoidable exchanges are the argmin combine and the ML stage's
-global aggregations.
+exchanges are the argmin combine, the ML stage's canonical fit layout
+and its global aggregations.
 """
 
 from __future__ import annotations

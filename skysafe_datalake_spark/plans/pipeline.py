@@ -13,11 +13,15 @@ projection + keyed upsert (``plans.usage``); a distributed ES sink
 attaches there via ``streaming.es_sink`` when the connector jar is
 present.
 
-Scale notes: every stage is a single declarative plan — formatting is
-shuffle-free (explode + casts), combine's only exchanges are the NN
-argmin combine and the ML stage's global aggregations, and each layer
-write is dynamic-partition-overwrite (idempotent minute re-runs touch
-one partition). Layer row counts are optional (``with_counts``) —
+Scale notes: every stage is a single declarative plan. Extract and
+formatting are shuffle-free (one raw file per fetch; explode + casts).
+Combine's exchanges are the NN join's argmin, the ML stage's canonical
+fit layout (one partition per million rows, see
+``ml.phase_kmeans.classify_phases``), the K-Means passes and the label
+and threshold aggregations. Usage adds the latest-row-per-key
+exchange. Each layer write is dynamic-partition-overwrite (idempotent
+minute re-runs touch one partition), one file per partition at minute
+scale. Layer row counts are optional (``with_counts``) —
 they are full actions, telemetry only (the reference counts
 unconditionally and recomputes lineage each time, §4 anti-pattern).
 """

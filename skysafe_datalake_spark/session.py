@@ -19,6 +19,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half the host's physical
+    memory in MiB (at least 1 GiB): a fixed size either starves a
+    large host or asks a small one for more than it has."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):  # no sysconf on this OS
+        return "4g"
+    return f"{max(1024, phys // 2 // 2**20)}m"
+
+
 _DEFAULTS: dict[str, str] = {
     # AQE: coalesce shuffle partitions at runtime, split skewed
     # partitions, demote/promote join strategies on real sizes.
@@ -41,9 +56,8 @@ _DEFAULTS: dict[str, str] = {
     # Local mode runs everything in the driver JVM; the Spark default
     # (1g) starves broadcast builds long before the machine does.
     # Applied only when this factory CREATES the JVM — a pre-existing
-    # session keeps its own memory setting. Override via
-    # SPARK_GRAFT_DRIVER_MEM.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # session keeps its own memory setting.
+    "spark.driver.memory": _driver_memory(),
     # Whole-stage codegen classes are cached keyed on generated source
     # (janino compile ≈ seconds for wide aggregates); the Spark default
     # of 100 entries thrashes under this engine's 183-query workload —

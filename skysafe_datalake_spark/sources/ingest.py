@@ -252,7 +252,9 @@ def write_raw_payloads(
     API responses — same contract as the reference's ``save_json`` —
     while the catalog's partition columns replace its path arithmetic."""
     lines = [(json.dumps(p, separators=(",", ":")),) for p in payloads]
-    df = spark.createDataFrame(lines, "value string")
+    # A fetch is a handful of documents: one file, not one per
+    # createDataFrame slice.
+    df = spark.createDataFrame(lines, "value string").coalesce(1)
     return catalog.write(df, "raw", source, entity, ts=ts, fmt="text")
 
 

@@ -209,17 +209,10 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_event_counts(load(spark, sf_dir, "events"))
 
 
-def skysafe_ml_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full combine+ML output (M1-M7), ALL eight columns including the
-    KMeans-derived flight_phase/flight_phase_id and the μ+2σ
-    is_anomaly/anomaly_score. Pinned by the golden md5 snapshot
-    (tests/test_domain_pipeline.py::test_ml_pipeline_golden_snapshot_sf001)
-    — the ML columns are not SQL-expressible, so the snapshot is their
-    verification; the registered gate query below projects the
-    relational subset the DuckDB oracle CAN re-derive."""
-    from skysafe_datalake_spark.plans.combine import combine_enrich
-
-    flights = synthetic_flights(load(spark, sf_dir, "events")).select(
+def skysafe_ml_flights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flights :func:`skysafe_ml_full` feeds the combine stage:
+    synthetic positions over ``events``, keyed by ``icao24``."""
+    return synthetic_flights(load(spark, sf_dir, "events")).select(
         F.col("flight_id").cast("string").alias("icao24"),
         F.col("lat").alias("latitude"),
         F.col("lon").alias("longitude"),
@@ -228,7 +221,13 @@ def skysafe_ml_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "velocity",
         "vertical_rate",
     )
-    weather = stations_weather_df(spark)
+
+
+def skysafe_ml_columns(flights: DataFrame, weather: DataFrame) -> DataFrame:
+    """Combine + ML over ``flights`` × ``weather``, projected to the
+    eight columns :func:`skysafe_ml_full` returns."""
+    from skysafe_datalake_spark.plans.combine import combine_enrich
+
     enriched, _info = combine_enrich(flights, weather)
     return enriched.select(
         "icao24",
@@ -239,6 +238,19 @@ def skysafe_ml_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flight_phase_id",
         "is_anomaly",
         "anomaly_score",
+    )
+
+
+def skysafe_ml_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full combine+ML output (M1-M7), ALL eight columns including the
+    KMeans-derived flight_phase/flight_phase_id and the μ+2σ
+    is_anomaly/anomaly_score. Pinned by the golden md5 snapshot
+    (tests/test_domain_pipeline.py::test_ml_pipeline_golden_snapshot_sf001)
+    — the ML columns are not SQL-expressible, so the snapshot is their
+    verification; the registered gate query below projects the
+    relational subset the DuckDB oracle CAN re-derive."""
+    return skysafe_ml_columns(
+        skysafe_ml_flights(spark, sf_dir), stations_weather_df(spark)
     )
 
 

@@ -862,11 +862,12 @@ def _stage_click_purchase_replay(
         # one tz offset (±14 h) early/late — never tighten the margin
         # below that skew plus the watermark + interval bound.
         # A replay with zero click/purchase rows has no max_ts (and no
-        # real match windows to clear); any fixed instant flushes the
-        # empty state.
+        # real match windows to clear); the fallback is a fixed future
+        # instant, so the sentinel still postdates any row a replay of
+        # present-day data could hold.
         max_ts = vals["max_ts"]
         if max_ts is None:
-            max_ts = datetime(2000, 1, 1)
+            max_ts = datetime(2100, 1, 1)
         flush = max_ts + timedelta(days=31)
         row = pa.table(
             {

@@ -443,24 +443,11 @@ def test_catalog_json_and_csv_round_trip(spark, tmp_path):
     } == {(1, "alpha", 1.5), (2, "beta", -3.25), (3, None, 0.0)}
 
 
-def test_ml_pipeline_golden_snapshot_sf001(spark):
-    """Golden-snapshot pin for the K-Means path (VERDICT.md #6): the
-    full ML stage at sf0.01 (seed 42, fixed input, fixed local[4]
-    session) is bit-deterministic — any drift in assembler/scaler/
-    KMeans/labeling/threshold changes this hash. Regenerate the
-    golden only for a *deliberate* semantic change.
-
-    The closed-form twin (`ml_rules_fallback`, oracle-checked by the
-    driver) covers the fallback path; this covers the clustering path
-    SQL can't express. Snapshots the FULL 8-column output
-    (skysafe_ml_full) — the registered `skysafe_ml_pipeline` gate
-    query projects the relational subset for the DuckDB oracle
-    (VERDICT r9 #4), so this hash is what verifies the ML columns."""
+def _ml_digest(df) -> tuple[str, list[str]]:
+    """md5 over the sorted, repr-rendered rows of an ML output frame,
+    plus those rows (columns in name order)."""
     import hashlib
 
-    from skysafe_datalake_spark.workload.domain import skysafe_ml_full
-
-    df = skysafe_ml_full(spark, "/root/testdata/sf0.01")
     cols = sorted(df.columns)
     rows = sorted(
         "|".join(repr(r[c]) if isinstance(r[c], float) else str(r[c]) for c in cols)
@@ -469,11 +456,63 @@ def test_ml_pipeline_golden_snapshot_sf001(spark):
     digest = hashlib.md5(
         ("\n".join(cols) + "\n" + "\n".join(rows)).encode()
     ).hexdigest()
+    return digest, rows
 
+
+def _golden_ml_md5() -> str:
     with open("tests/golden/skysafe_ml_pipeline_sf0.01.md5") as f:
-        golden = f.read().strip()
-    assert digest == golden
+        return f.read().strip()
+
+
+def test_ml_pipeline_golden_snapshot_sf001(spark):
+    """Golden-snapshot pin for the K-Means path (VERDICT.md #6): the
+    full ML stage at sf0.01 (seed 42, fixed input) is bit-deterministic
+    — any drift in assembler/scaler/KMeans/labeling/threshold changes
+    this hash. The stage sets its own fit layout, so the hash holds
+    under any session shape (see the session-shape test below).
+    Regenerate the golden only for a *deliberate* semantic change.
+
+    The closed-form twin (`ml_rules_fallback`, oracle-checked by the
+    driver) covers the fallback path; this covers the clustering path
+    SQL can't express. Snapshots the FULL 8-column output
+    (skysafe_ml_full) — the registered `skysafe_ml_pipeline` gate
+    query projects the relational subset for the DuckDB oracle
+    (VERDICT r9 #4), so this hash is what verifies the ML columns."""
+    from skysafe_datalake_spark.workload.domain import skysafe_ml_full
+
+    digest, rows = _ml_digest(skysafe_ml_full(spark, "/root/testdata/sf0.01"))
+    assert digest == _golden_ml_md5()
 
     # diagnosable invariants alongside the hash
     phases = {r.split("|")[2] for r in rows}  # cols sorted: ... flight_phase at idx 2
     assert phases <= {"Takeoff / Landing", "Climb / Descent", "Cruise"}
+
+
+def test_ml_output_depends_only_on_input(spark):
+    """The ML stage's output is a function of its input rows: neither
+    the shuffle-partition setting nor the input's partitioning changes
+    a single row, because classify_phases fits on a layout it sets
+    itself (k-means|| initialisation depends on partition index and
+    row order)."""
+    from skysafe_datalake_spark.workload.domain import (
+        skysafe_ml_columns,
+        skysafe_ml_flights,
+        skysafe_ml_full,
+    )
+    from skysafe_datalake_spark.workload.tables import stations_weather_df
+
+    sf = "/root/testdata/sf0.01"
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    digests = {}
+    try:
+        for parts in (4, 32, 7):
+            spark.conf.set(key, str(parts))
+            digests[f"shuffle={parts}"] = _ml_digest(skysafe_ml_full(spark, sf))[0]
+    finally:
+        spark.conf.set(key, saved)
+    for splits in (1, 5):
+        flights = skysafe_ml_flights(spark, sf).repartition(splits)
+        df = skysafe_ml_columns(flights, stations_weather_df(spark))
+        digests[f"input_partitions={splits}"] = _ml_digest(df)[0]
+    assert set(digests.values()) == {_golden_ml_md5()}, digests

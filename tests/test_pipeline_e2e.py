@@ -182,6 +182,144 @@ def test_batch_pipeline_materializes_all_layers(spark, tmp_path):
     assert "date=2026-02-26" in plan or "PartitionFilters" in plan
 
 
+def _phase_rows(n=300, seed=7):
+    """A snapshot with ground, climbing/descending and cruising
+    traffic (plus a few odd aircraft), so the minute's K-Means fit
+    separates its clusters and takes the KMeans path."""
+    import random
+
+    rnd = random.Random(seed)
+    out = []
+    for i in range(1, n + 1):
+        kind = i % 3
+        if kind == 0:  # on the ground or on a take-off/landing roll
+            alt, vel, vr = rnd.uniform(0, 300), rnd.uniform(0, 60), rnd.uniform(-1, 1)
+        elif kind == 1:  # climb or descent
+            alt = rnd.uniform(1000, 9000)
+            vel = rnd.uniform(120, 220)
+            vr = rnd.choice((-1, 1)) * rnd.uniform(5, 15)
+        else:  # cruise
+            alt, vel, vr = rnd.uniform(10000, 12000), rnd.uniform(220, 260), rnd.uniform(-1, 1)
+        if i % 50 == 0:  # an odd one: fast and steep near the ground
+            alt, vel, vr = rnd.uniform(0, 500), rnd.uniform(250, 300), 25.0
+        out.append(
+            {
+                "flight_id": i,
+                "lat": rnd.uniform(41.3, 51.1),
+                "lon": rnd.uniform(-5.1, 9.6),
+                "baro_altitude": alt,
+                "on_ground": kind == 0 and vel < 30,
+                "velocity": vel,
+                "vertical_rate": vr,
+            }
+        )
+    return out
+
+
+def _partition_files(partition_dir):
+    return [f for f in os.listdir(partition_dir) if f.startswith("part-")]
+
+
+def test_batch_minute_invariants(spark, tmp_path):
+    """Phase labels follow cluster altitude, the anomaly flag is the
+    μ+2σ threshold over the score, and each layer partition of a
+    minute is one data file."""
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    result = run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
+    info = result.model_info
+    assert info.used_kmeans
+    usage = cat.read_latest(spark, "usage", "skysafe", "flights")
+    rows = usage.select(
+        "flight_phase", "flight_phase_id", "baro_altitude", "is_anomaly", "anomaly_score"
+    ).collect()
+    assert len(rows) == 300
+
+    # M5: clusters labelled in the order of their mean altitude.
+    by_cluster: dict[int, list[float]] = {}
+    label_of: dict[int, set[str]] = {}
+    for r in rows:
+        by_cluster.setdefault(r["flight_phase_id"], []).append(r["baro_altitude"])
+        label_of.setdefault(r["flight_phase_id"], set()).add(r["flight_phase"])
+    assert all(len(labels) == 1 for labels in label_of.values())
+    ranked = sorted(by_cluster, key=lambda c: sum(by_cluster[c]) / len(by_cluster[c]))
+    assert [label_of[c].pop() for c in ranked] == [
+        "Takeoff / Landing",
+        "Climb / Descent",
+        "Cruise",
+    ]
+
+    # M7: is_anomaly == score > threshold; anomaly_score is rounded to
+    # 4 decimals, so rows within half a unit of the threshold are moot.
+    decided = [r for r in rows if abs(r["anomaly_score"] - info.anomaly_threshold) > 5e-5]
+    assert len(decided) >= len(rows) - 2
+    assert all(
+        r["is_anomaly"] == (r["anomaly_score"] > info.anomaly_threshold) for r in decided
+    )
+    assert any(r["is_anomaly"] for r in rows)
+
+    date, hour = LakeCatalog.partition_values(FIXTURE_TS)
+    layers = (
+        ("raw", "opensky", "flights"),
+        ("raw", "open_meteo", "weather"),
+        ("formatted", "opensky", "flights"),
+        ("formatted", "open_meteo", "weather"),
+        ("enriched", "skysafe", "flights"),
+        ("usage", "skysafe", "flights"),
+    )
+    for layer in layers:
+        part = os.path.join(cat.path(*layer), f"date={date}", f"hour={hour}")
+        assert len(_partition_files(part)) == 1, layer
+
+
+def test_batch_and_stream_paths_agree(spark, tmp_path):
+    """One snapshot through the batch DAG and through the flights
+    stream (same weather) lands the same usage rows: the ML stage does
+    not depend on which path built its input."""
+    import shutil
+
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
+    batch = cat.read_latest(spark, "usage", "skysafe", "flights").drop("date", "hour")
+
+    # The stream reads the very snapshot document the batch extracted.
+    date, hour = LakeCatalog.partition_values(FIXTURE_TS)
+    raw_part = os.path.join(
+        cat.path("raw", "opensky", "flights"), f"date={date}", f"hour={hour}"
+    )
+    raw_dir = tmp_path / "stream_raw"
+    raw_dir.mkdir()
+    for name in _partition_files(raw_part):
+        shutil.copy(os.path.join(raw_part, name), raw_dir / f"{name}.json")
+    weather = cat.read_latest(spark, "formatted", "open_meteo", "weather").drop(
+        "date", "hour"
+    )
+    from skysafe_datalake_spark.streaming.driver import run_flights_stream
+
+    usage_dir = str(tmp_path / "stream_usage")
+    q = run_flights_stream(
+        spark,
+        str(raw_dir),
+        weather,
+        usage_dir,
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    try:
+        assert q.awaitTermination(300), "stream did not drain its backlog"
+    finally:
+        q.stop()
+    stream = spark.read.parquet(usage_dir).drop("kb")
+
+    assert sorted(stream.columns) == sorted(batch.columns)
+    cols = sorted(batch.columns)
+    got = sorted((tuple(r) for r in stream.select(cols).collect()), key=repr)
+    want = sorted((tuple(r) for r in batch.select(cols).collect()), key=repr)
+    assert len(want) == 300
+    assert got == want
+
+
 # ───────────────────── bucketed upsert contract ───────────────────
 
 
