@@ -12,8 +12,8 @@ Dataflow (reference step numbers):
 
 Scale notes: the weather side is dimension-sized → always broadcast;
 flight-side skew is irrelevant (keys are unique per aircraft); the
-exchanges are the argmin combine, the ML stage's canonical fit layout
-and its global aggregations.
+only exchange is the argmin combine. The ML stage checkpoints the
+scored rows once and fits on the driver (see ``ml.phase_kmeans``).
 """
 
 from __future__ import annotations

@@ -15,11 +15,10 @@ present.
 
 Scale notes: every stage is a single declarative plan. Extract and
 formatting are shuffle-free (one raw file per fetch; explode + casts).
-Combine's exchanges are the NN join's argmin, the ML stage's canonical
-fit layout (one partition per million rows, see
-``ml.phase_kmeans.classify_phases``), the K-Means passes and the label
-and threshold aggregations. Usage adds the latest-row-per-key
-exchange. Each layer write is dynamic-partition-overwrite (idempotent
+Combine's only exchange is the NN join's argmin; the ML stage
+checkpoints its input once and fits on the driver from one Arrow
+collect (``ml.phase_kmeans.classify_phases``). Usage adds the
+latest-row-per-key exchange. Each layer write is dynamic-partition-overwrite (idempotent
 minute re-runs touch one partition), one file per partition at minute
 scale. Layer row counts are optional (``with_counts``) —
 they are full actions, telemetry only (the reference counts

@@ -24,6 +24,7 @@ the capability the reference lacks outright.
 from __future__ import annotations
 
 import contextlib
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -190,6 +191,12 @@ def stateful_shuffle_partitions(
     return int(max(lo, min(hi, n_rows // rows_per_store)))
 
 
+# Held by the session-conf scopes below for their whole duration. They
+# nest (a stateful replay sizes its shuffle and drops the trailing
+# batch), hence re-entrant.
+_CONF_SCOPE_LOCK = threading.RLock()
+
+
 @contextlib.contextmanager
 def no_trailing_nodata_batch(spark: SparkSession):
     """Scope ``spark.sql.streaming.noDataMicroBatches.enabled=false``
@@ -215,14 +222,20 @@ def no_trailing_nodata_batch(spark: SparkSession):
     opposite — its null-padded rows are produced BY the
     watermark-advance flush in the trailing batch — so
     streaming_left/full_outer_join must NEVER run under this scope
-    (pinned by tests/test_streaming_contracts.py)."""
+    (pinned by tests/test_streaming_contracts.py).
+
+    The conf is session-global, so the scope holds ``_CONF_SCOPE_LOCK``
+    for its whole duration: conf-scoped replays on one session
+    serialize, and a concurrent scope can neither read the scoped value
+    as its own to restore nor restore over a scope still running."""
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    saved = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)
+    with _CONF_SCOPE_LOCK:
+        saved = spark.conf.get(key, "true")
+        spark.conf.set(key, "false")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, saved)
 
 
 @contextlib.contextmanager
@@ -239,20 +252,19 @@ def sized_stateful_shuffle(
     duration of a stateful stream, restoring the session's value on
     exit (success, return, or raise). The save/restore is load-bearing
     on a shared session — six registry queries used to hand-roll this
-    try/finally and each new one risked getting the restore wrong."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            stateful_shuffle_partitions(
-                n_rows, rows_per_store=rows_per_store, lo=lo, hi=hi
-            )
-        ),
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    try/finally and each new one risked getting the restore wrong.
+    Like :func:`no_trailing_nodata_batch` (the two nest), it holds
+    ``_CONF_SCOPE_LOCK`` for its whole duration, so conf changes made
+    through these scopes serialize across threads."""
+    key = "spark.sql.shuffle.partitions"
+    n = stateful_shuffle_partitions(n_rows, rows_per_store=rows_per_store, lo=lo, hi=hi)
+    with _CONF_SCOPE_LOCK:
+        saved = spark.conf.get(key)
+        spark.conf.set(key, str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, saved)
 
 
 def streaming_dedup(events, *, id_col: str = "event_id", watermark: str = "2 hours"):

@@ -283,8 +283,9 @@ FROM scored
 @register("skysafe_ml_pipeline", _ML_RELATIONAL_SQL)
 def skysafe_ml_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full combine+ML stage (M1-M7): nearest-station join → risk →
-    K-Means phase classification (k=3, seed=42) with rules fallback →
-    μ+2σ anomaly flags. The WHOLE pipeline executes (the KMeans fit,
+    K-Means phase classification (k=3, fitted on the driver, best of
+    10 seeded starts) with rules fallback → μ+2σ anomaly flags. The
+    WHOLE pipeline executes (the checkpoint, the driver-side fit,
     centroid gate, label stats, and anomaly threshold all run eagerly
     during plan construction); the returned frame projects the
     relational columns (icao24, dist_km, risk_score, risk_category —

@@ -333,11 +333,11 @@ FROM scored
 """,
 )
 def ml_rules_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drives the REAL ML stage (M1-M7: assembler → scaler → KMeans →
+    """Drives the REAL ML stage (M1-M7: scaling → K-Means fit →
     centroid gate → fallback → μ+2σ threshold) through a homogeneous
     population, where every step has a closed-form answer the oracle
-    can state: identical kinematics ⇒ coincident centroids ⇒ the gate
-    (max pairwise distance < 1.0) must fall back to rules ('Cruise':
+    can state: identical kinematics ⇒ one distinct feature row, fewer
+    than the 3 clusters ⇒ the stage must take the rules path ('Cruise':
     alt>3000, |vr|<2.5), every distance-to-centroid is exactly 0.0,
     the threshold is μ+2σ = 0.0, and nothing is anomalous. A KMeans
     path taken by mistake, a broken gate, or a threshold off by any

@@ -206,6 +206,45 @@ def test_anomaly_flags_extreme_kinematics(spark, weather):
     assert len(anomalies) < 10  # μ+2σ keeps the flag rare
 
 
+@pytest.mark.parametrize("n", [0, 1, 2])
+def test_combine_with_fewer_aircraft_than_clusters(spark, weather, n):
+    """Fewer than 3 aircraft cannot form 3 clusters: the minute takes the
+    rules path with every distance 0.0 and threshold 0.0, and zero
+    aircraft give an empty result with the full output schema."""
+    states = [
+        _state("gnd001", baro=100.0, vel=40.0, vr=0.0),
+        _state("crz001", baro=11000.0, vel=250.0, vr=0.5),
+    ][:n]
+    full, _ = combine_enrich(_flights_df(spark, _heterogeneous_states()), weather)
+    enriched, info = combine_enrich(_flights_df(spark, states), weather)
+    assert [(f.name, f.dataType) for f in enriched.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    assert (info.used_kmeans, info.anomaly_threshold, info.anomaly_count) == (
+        False, 0.0, 0
+    )
+    rows = enriched.select(
+        "icao24", "flight_phase", "flight_phase_id", "is_anomaly", "anomaly_score"
+    ).collect()
+    phase = {"gnd001": ("Takeoff / Landing", 0), "crz001": ("Cruise", 2)}
+    assert sorted(tuple(r) for r in rows) == sorted(
+        (s[0], *phase[s[0]], False, 0.0) for s in states
+    )
+
+
+def test_classify_phases_refuses_above_the_row_cap(spark):
+    """Above MAX_FIT_ROWS the stage refuses before collecting to the
+    driver, with the type scale harnesses record as a refusal."""
+    from skysafe_datalake_spark.errors import OverScaleRefusal
+    from skysafe_datalake_spark.ml.phase_kmeans import MAX_FIT_ROWS, ML_FEATURES
+
+    df = spark.range(MAX_FIT_ROWS + 1).select(
+        *(F.col("id").cast("double").alias(feat) for feat in ML_FEATURES)
+    )
+    with pytest.raises(OverScaleRefusal, match="at most"):
+        classify_phases(df)
+
+
 def test_usage_projection_and_keyed_upsert(spark, weather):
     enriched, _ = combine_enrich(
         _flights_df(spark, _heterogeneous_states(5)), weather
@@ -467,9 +506,9 @@ def _golden_ml_md5() -> str:
 def test_ml_pipeline_golden_snapshot_sf001(spark):
     """Golden-snapshot pin for the K-Means path (VERDICT.md #6): the
     full ML stage at sf0.01 (seed 42, fixed input) is bit-deterministic
-    — any drift in assembler/scaler/KMeans/labeling/threshold changes
-    this hash. The stage sets its own fit layout, so the hash holds
-    under any session shape (see the session-shape test below).
+    — any drift in scaling/K-Means/labeling/threshold changes this
+    hash. The fit sorts its input rows, so the hash holds under any
+    session shape (see the session-shape test below).
     Regenerate the golden only for a *deliberate* semantic change.
 
     The closed-form twin (`ml_rules_fallback`, oracle-checked by the
@@ -491,9 +530,8 @@ def test_ml_pipeline_golden_snapshot_sf001(spark):
 def test_ml_output_depends_only_on_input(spark):
     """The ML stage's output is a function of its input rows: neither
     the shuffle-partition setting nor the input's partitioning changes
-    a single row, because classify_phases fits on a layout it sets
-    itself (k-means|| initialisation depends on partition index and
-    row order)."""
+    a single row, because classify_phases sorts the rows it fits
+    (its k-means++ starts draw rows by index)."""
     from skysafe_datalake_spark.workload.domain import (
         skysafe_ml_columns,
         skysafe_ml_flights,

@@ -320,6 +320,90 @@ def test_batch_and_stream_paths_agree(spark, tmp_path):
     assert got == want
 
 
+def test_two_aircraft_minute(spark, tmp_path):
+    """A sparse snapshot (fewer aircraft than clusters) is a normal
+    minute: the rules path labels it and its usage rows land."""
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows(2)))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    result = run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
+    assert not result.model_info.used_kmeans
+    usage = cat.read_latest(spark, "usage", "skysafe", "flights")
+    rows = usage.select("icao24", "is_anomaly", "anomaly_score").collect()
+    assert sorted(tuple(r) for r in rows) == [("1", False, 0.0), ("2", False, 0.0)]
+
+
+def test_combine_job_budget(spark, tmp_path):
+    """A perf gate host noise cannot move: on one fixture minute the
+    combine stage (NN join, risk, phase model) starts at most 4 Spark
+    jobs, counted by Spark's own status tracker."""
+    from skysafe_datalake_spark.plans.combine import combine_enrich
+
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
+    flights = cat.read_latest(spark, "formatted", "opensky", "flights").drop("date", "hour")
+    weather = cat.read_latest(spark, "formatted", "open_meteo", "weather").drop(
+        "date", "hour"
+    )
+
+    sc = spark.sparkContext
+    group = "test-combine-job-budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        _, info = combine_enrich(flights, weather)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert info.used_kmeans
+    assert 1 <= len(jobs) <= 4, sorted(jobs)
+
+
+def test_minute_rerun_after_crash_matches_clean_run(spark, tmp_path, monkeypatch):
+    """A minute whose usage stage crashed, re-run for the same ts,
+    leaves every layer partition as a clean run of that minute in a
+    second lake: the same rows, one data file, nothing left over from
+    the failed attempt."""
+    from skysafe_datalake_spark.plans import pipeline as plans_pipeline
+
+    doc = states_payload(_phase_rows())
+    clean = LakeCatalog(str(tmp_path / "clean"))
+    run_batch_pipeline(spark, clean, *fixture_clients(doc), ts=FIXTURE_TS)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("usage stage crashed")
+
+    rerun = LakeCatalog(str(tmp_path / "rerun"))
+    with monkeypatch.context() as m:
+        m.setattr(plans_pipeline, "usage_stage", crash)
+        with pytest.raises(RuntimeError, match="usage stage crashed"):
+            run_batch_pipeline(spark, rerun, *fixture_clients(doc), ts=FIXTURE_TS)
+    run_batch_pipeline(spark, rerun, *fixture_clients(doc), ts=FIXTURE_TS)
+
+    date, hour = LakeCatalog.partition_values(FIXTURE_TS)
+    for layer in (
+        ("raw", "opensky", "flights"),
+        ("raw", "open_meteo", "weather"),
+        ("formatted", "opensky", "flights"),
+        ("formatted", "open_meteo", "weather"),
+        ("enriched", "skysafe", "flights"),
+        ("usage", "skysafe", "flights"),
+    ):
+        rows = []
+        for cat in (clean, rerun):
+            table = cat.path(*layer)
+            assert os.listdir(table) == [f"date={date}"], layer
+            assert os.listdir(os.path.join(table, f"date={date}")) == [f"hour={hour}"]
+            part = os.path.join(table, f"date={date}", f"hour={hour}")
+            names = sorted(os.listdir(part))
+            data = [n for n in names if not n.startswith(".")]
+            assert len(data) == 1 and names == [f".{data[0]}.crc", data[0]], (layer, names)
+            fmt = "text" if layer[0] == "raw" else "parquet"
+            df = spark.read.format(fmt).load(part)
+            rows.append(sorted(map(repr, df.collect())))
+        assert rows[0] == rows[1], layer
+
+
 # ───────────────────── bucketed upsert contract ───────────────────
 
 

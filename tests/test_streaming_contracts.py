@@ -423,3 +423,44 @@ def test_nodata_batch_scope_restores_conf(spark):
         with no_trailing_nodata_batch(spark):
             raise RuntimeError("boom")
     assert spark.conf.get(key) == "true"
+
+
+def test_conf_scopes_serialize_across_threads(spark):
+    """The session-conf scopes hold one shared lock: a second thread's
+    scope waits for the first to exit, so neither reads the other's
+    value and the session value is restored. Without the lock the
+    second scope would save the first one's value and restore it last,
+    leaking it into the session."""
+    import threading
+
+    from skysafe_datalake_spark.streaming.driver import (
+        no_trailing_nodata_batch,
+        sized_stateful_shuffle,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    first_in, second_in, first_out = (threading.Event() for _ in range(3))
+    seen = {}
+
+    def first():
+        with sized_stateful_shuffle(spark, 0, lo=9, hi=9), no_trailing_nodata_batch(spark):
+            first_in.set()
+            second_in.wait(0.5)  # the second scope must not get in meanwhile
+            seen["first"] = spark.conf.get(key)
+        first_out.set()
+
+    def second():
+        first_in.wait(30)
+        with sized_stateful_shuffle(spark, 0, lo=11, hi=11):
+            second_in.set()
+            first_out.wait(30)
+            seen["second"] = spark.conf.get(key)
+
+    threads = [threading.Thread(target=f) for f in (first, second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert seen == {"first": "9", "second": "11"}
+    assert spark.conf.get(key) == saved
