@@ -1,4 +1,4 @@
-"""Medallion lake catalog: layer/source/entity → partitioned Parquet.
+"""Medallion lake catalog: layer/source/entity → partitioned files.
 
 Replaces the reference's path arithmetic + S3 ListObjectsV2 scanning
 (``/root/reference/src/helpers.py:90-154``:
@@ -9,20 +9,41 @@ code enumerating object-store prefixes. Layers follow the reference's
 medallion layout (``README.md:57-75``): raw (JSON) → formatted /
 enriched / usage (Parquet).
 
-Scale design: dynamic partition overwrite (only touched partitions
-rewritten — the reference's ``mode("overwrite")`` nukes the whole
-entity dir); latest-partition discovery is a partition-listing-only
-query (no data files read).
+Two write paths. ``write`` runs a Spark write with dynamic partition
+overwrite (only touched partitions rewritten — the reference's
+``mode("overwrite")`` nukes the whole entity dir). ``write_file``
+puts one fetch's bytes into the partition through the Hadoop
+FileSystem client, no Spark job: the raw layer, like the reference's
+boto3 ``save_json``. Latest-partition discovery is a directory
+listing (no data files read), and a layer read back by the catalog
+instance that wrote it uses the schema it wrote instead of inferring
+one from file footers.
 """
 
 from __future__ import annotations
 
+import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYERS = ("raw", "formatted", "enriched", "usage")
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` from the session's Hadoop
+    configuration: the client Spark's own readers use, so it serves
+    plain, file://, s3a:// and hdfs:// paths alike."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _data_schema(schema: StructType) -> StructType:
+    """``schema`` without the partition columns: a read schema that
+    named them would override their discovered types."""
+    return StructType([f for f in schema if f.name.lower() not in ("date", "hour")])
 
 
 def _hadoop_ls(spark: SparkSession, path: str):
@@ -36,9 +57,7 @@ def _hadoop_ls(spark: SparkSession, path: str):
     listing itself fails (unsupported scheme, gateway down) so callers
     can fall back."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_fs(spark, path)
         if not fs.exists(jpath):
             return []
         return [
@@ -52,6 +71,10 @@ def _hadoop_ls(spark: SparkSession, path: str):
 class LakeCatalog:
     def __init__(self, root: str):
         self.root = root.rstrip("/")
+        # entity path -> (date, hour, data schema) of this instance's
+        # last successful write(); read_latest reuses the schema while
+        # that partition is still the latest one.
+        self._written: dict[str, tuple[str, str, StructType]] = {}
 
     def path(self, layer: str, source: str, entity: str) -> str:
         if layer not in LAYERS:
@@ -80,6 +103,8 @@ class LakeCatalog:
         overwrite semantics without its full-table clobber)."""
         date, hour = self.partition_values(ts)
         target = self.path(layer, source, entity)
+        schema = _data_schema(df.schema)
+        self._written.pop(target, None)
         (
             df.withColumn("date", F.lit(date))
             .withColumn("hour", F.lit(hour))
@@ -90,6 +115,49 @@ class LakeCatalog:
             .partitionBy("date", "hour")
             .save(target)
         )
+        self._written[target] = (date, hour, schema)
+        return target
+
+    def write_file(
+        self,
+        spark: SparkSession,
+        data: bytes,
+        layer: str,
+        source: str,
+        entity: str,
+        *,
+        ts: datetime | None = None,
+    ) -> str:
+        """Make ``data`` the only data file of one date/hour partition,
+        through the Hadoop FileSystem client (no Spark job). The bytes
+        go to a hidden temp file, every other entry of the partition
+        (old data files, stale temps, ``_SUCCESS``) is deleted, and the
+        temp is renamed to ``part-<uuid4>.json``. Readers skip hidden
+        names, so they never see a partial file, and a re-run minute
+        replaces the partition as ``write``'s dynamic overwrite does;
+        an empty ``data`` leaves one empty file, which reads as 0 rows.
+        The name is new on every write because a file-stream source
+        remembers paths and would never see a rewritten one."""
+        date, hour = self.partition_values(ts)
+        target = self.path(layer, source, entity)
+        self._written.pop(target, None)
+        name = f"part-{uuid.uuid4()}.json"
+        tmp_name = f".{name}.tmp"
+        fs, tmp = _hadoop_fs(spark, f"{target}/date={date}/hour={hour}/{tmp_name}")
+        part = tmp.getParent()
+        out = fs.create(tmp, True)
+        try:
+            out.write(data)
+        finally:
+            out.close()
+        for st in fs.listStatus(part):
+            path = st.getPath()
+            if path.getName() != tmp_name:
+                fs.delete(path, True)
+        # part.suffix("/x") is part's child x, built without a JVM
+        # class lookup (one gateway round trip per package level).
+        if not fs.rename(tmp, part.suffix(f"/{name}")):
+            raise OSError(f"could not rename {tmp.toString()} to {name}")
         return target
 
     def read(
@@ -208,11 +276,23 @@ class LakeCatalog:
         back to a Spark-side distinct() over the partition columns —
         a partition-values scan instead of a listing, but correct on
         any filesystem Spark can read (returning ALL partitions would
-        be a silent semantic downgrade)."""
+        be a silent semantic downgrade).
+
+        Without a ``schema``, the data schema is the one this instance
+        recorded when it wrote the latest partition (no footer-reading
+        job). When the latest partition is not the recorded one (another
+        writer wrote a newer hour) or nothing was recorded, the schema
+        is inferred from the latest partition's files. Either way
+        ``date``/``hour`` come from partition discovery with their
+        inferred types."""
+        latest = self._latest_partition(layer, source, entity, spark)
+        if schema is None and latest is not None:
+            schema = self._latest_schema(
+                spark, layer, source, entity, latest, fmt, options
+            )
         df = self.read(
             spark, layer, source, entity, fmt=fmt, options=options, schema=schema
         )
-        latest = self._latest_partition(layer, source, entity, spark)
         if latest is None and {"date", "hour"} <= set(df.columns):
             row = (
                 df.select("date", "hour")
@@ -238,6 +318,27 @@ class LakeCatalog:
             return df
         date, hour = latest
         return df.where((F.col("date") == date) & (F.col("hour") == hour))
+
+    def _latest_schema(
+        self, spark, layer, source, entity, latest, fmt, options
+    ) -> StructType:
+        """Data schema for reading the ``latest`` (date, hour)
+        partition: the recorded one if this instance wrote it, else
+        inferred from that partition's files alone. Inferring over the
+        whole entity would take the first file's footer, which may be
+        an older partition's schema."""
+        target = self.path(layer, source, entity)
+        date, hour = latest
+        recorded = self._written.get(target)
+        if recorded is not None and recorded[:2] == (date, hour):
+            return recorded[2]
+        inferred = (
+            spark.read.format(fmt)
+            .options(**(options or {}))
+            .load(f"{target}/date={date}/hour={hour}")
+            .schema
+        )
+        return _data_schema(inferred)
 
     def compact(
         self,

@@ -13,16 +13,19 @@ projection + keyed upsert (``plans.usage``); a distributed ES sink
 attaches there via ``streaming.es_sink`` when the connector jar is
 present.
 
-Scale notes: every stage is a single declarative plan. Extract and
-formatting are shuffle-free (one raw file per fetch; explode + casts).
-Combine's only exchange is the NN join's argmin; the ML stage
-checkpoints its input once and fits on the driver from one Arrow
-collect (``ml.phase_kmeans.classify_phases``). Usage adds the
-latest-row-per-key exchange. Each layer write is dynamic-partition-overwrite (idempotent
-minute re-runs touch one partition), one file per partition at minute
-scale. Layer row counts are optional (``with_counts``) —
-they are full actions, telemetry only (the reference counts
-unconditionally and recomputes lineage each time, §4 anti-pattern).
+Scale notes: extract runs no Spark job: each fetch's document lines
+become one raw file through the Hadoop FileSystem client
+(``LakeCatalog.write_file``). Formatting is a shuffle-free single plan
+(explode + casts). Layer read-backs infer no schema: raw JSON is read
+with a fixed schema and each Parquet layer with the schema the catalog
+recorded when it wrote it. Combine's only exchange is the NN join's
+argmin; the ML stage checkpoints its input once and fits on the driver
+from one Arrow collect (``ml.phase_kmeans.classify_phases``). Usage
+adds the latest-row-per-key exchange. Each layer write replaces one
+partition (idempotent minute re-runs), one file per partition at
+minute scale. Layer row counts are optional (``with_counts``) — they
+are full actions, telemetry only (the reference counts unconditionally
+and recomputes lineage each time, §4 anti-pattern).
 """
 
 from __future__ import annotations

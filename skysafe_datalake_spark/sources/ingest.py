@@ -1,6 +1,6 @@
 """Batch ingestion drivers: OpenSky / Open-Meteo fetchers with a
 pluggable transport, writing verbatim payload JSON into the raw lake
-layer through Spark.
+layer.
 
 Reference semantics reproduced:
 - OAuth2 client-credentials token + authenticated GET ``/states/all``
@@ -14,10 +14,12 @@ Reference semantics reproduced:
   (``/root/reference/src/extract_weather.py:56-92``);
 - raw layer stores the payload as-is (one JSON document per fetch,
   ``extract_flights.py:66-75`` via boto3 ``save_json``) — here the
-  document lines are written through the partitioned
-  :class:`~skysafe_datalake_spark.catalog.LakeCatalog` (text format,
-  ``date``/``hour`` partition columns) so raw I/O is Spark-owned and
-  partition-pruned like every other layer.
+  fetch's document lines become one file in its ``date``/``hour``
+  partition, written through the Hadoop FileSystem client by
+  :meth:`~skysafe_datalake_spark.catalog.LakeCatalog.write_file` (no
+  Spark job; any URI scheme the session can read). The format stage
+  reads them back through Spark with a fixed schema, partition-pruned
+  like every other layer.
 
 The transport is a plain callable, so tests and offline runs inject
 fixture payloads through the *same* token/fetch/tolerance code paths
@@ -248,14 +250,13 @@ def write_raw_payloads(
     ts: datetime | None = None,
 ) -> str:
     """Write payload documents verbatim (one JSON line each) into the
-    raw layer. Text format keeps the raw layer byte-faithful to the
-    API responses — same contract as the reference's ``save_json`` —
-    while the catalog's partition columns replace its path arithmetic."""
-    lines = [(json.dumps(p, separators=(",", ":")),) for p in payloads]
-    # A fetch is a handful of documents: one file, not one per
-    # createDataFrame slice.
-    df = spark.createDataFrame(lines, "value string").coalesce(1)
-    return catalog.write(df, "raw", source, entity, ts=ts, fmt="text")
+    raw layer as one file through the Hadoop FileSystem client
+    (:meth:`LakeCatalog.write_file`), no Spark job — the reference's
+    ``save_json`` contract, with the catalog's ``date``/``hour``
+    partitions in place of its path arithmetic. A fetch with no
+    documents replaces the partition with an empty file."""
+    data = "".join(json.dumps(p, separators=(",", ":")) + "\n" for p in payloads)
+    return catalog.write_file(spark, data.encode(), "raw", source, entity, ts=ts)
 
 
 def extract_flights(

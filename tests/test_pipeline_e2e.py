@@ -404,6 +404,237 @@ def test_minute_rerun_after_crash_matches_clean_run(spark, tmp_path, monkeypatch
         assert rows[0] == rows[1], layer
 
 
+def _jobs_in_group(spark, group, fn):
+    """``fn()`` under its own Spark job group, and the number of jobs
+    it started, by Spark's status tracker."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_minute_job_budget(spark, tmp_path):
+    """A perf gate host noise cannot move: each stage of one fixture
+    minute, run in its own job group, starts no more Spark jobs than
+    its budget. Extract writes files, not Spark jobs, and no layer
+    read-back starts a schema-inference job."""
+    from skysafe_datalake_spark.plans import pipeline as plans_pipeline
+
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    ts = FIXTURE_TS
+    stages = {
+        "extract_flights": (
+            0, lambda: ingest.extract_flights(spark, cat, flights_client, ts=ts)
+        ),
+        "extract_weather": (
+            0, lambda: ingest.extract_weather(spark, cat, weather_client, ts=ts)
+        ),
+        "format_flights": (
+            1, lambda: plans_pipeline.format_flights_stage(spark, cat, ts=ts)
+        ),
+        "format_weather": (
+            1, lambda: plans_pipeline.format_weather_stage(spark, cat, ts=ts)
+        ),
+        "combine": (5, lambda: plans_pipeline.combine_stage(spark, cat, ts=ts)),
+        "usage": (2, lambda: plans_pipeline.usage_stage(spark, cat, ts=ts)),
+    }
+    jobs = {}
+    for name, (_budget, fn) in stages.items():
+        out, jobs[name] = _jobs_in_group(spark, f"test-minute-job-budget-{name}", fn)
+        if name == "combine":
+            assert out[1].used_kmeans
+    assert all(jobs[name] <= budget for name, (budget, _fn) in stages.items()), jobs
+    assert sum(jobs.values()) <= 9, jobs
+    assert cat.read_latest(spark, "usage", "skysafe", "flights").count() == 300
+
+
+def _raw_partition(cat, source, entity, ts=FIXTURE_TS):
+    date, hour = LakeCatalog.partition_values(ts)
+    return os.path.join(cat.path("raw", source, entity), f"date={date}", f"hour={hour}")
+
+
+def test_zero_document_fetch_empties_the_raw_partition(spark, tmp_path):
+    """A fetch that returns no documents replaces the minute's raw
+    partition with an empty file instead of re-serving the previous
+    fetch (the reference's ``save_json(results)`` of an empty list)."""
+    from skysafe_datalake_spark.sources import openmeteo
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    docs = [weather_payload(s) for s in STATIONS[:2]]
+    ingest.write_raw_payloads(spark, cat, docs, "open_meteo", "weather", ts=FIXTURE_TS)
+
+    def read():
+        return cat.read_latest(
+            spark, "raw", "open_meteo", "weather", fmt="json", schema=openmeteo.RAW_SCHEMA
+        ).count()
+
+    assert read() == 2
+    ingest.write_raw_payloads(spark, cat, [], "open_meteo", "weather", ts=FIXTURE_TS)
+    assert read() == 0
+    part = _raw_partition(cat, "open_meteo", "weather")
+    (data,) = [n for n in os.listdir(part) if not n.startswith(".")]
+    assert os.path.getsize(os.path.join(part, data)) == 0
+
+
+def test_flights_stream_sees_every_minute_of_an_hour(spark, tmp_path):
+    """Two minutes of one hour land two raw files; a stream over the
+    raw flights layer picks up the second one as a new batch. A raw
+    write that reused its file name would be skipped by the file
+    source, which remembers the paths it has read."""
+    from datetime import timedelta
+
+    from skysafe_datalake_spark.plans.pipeline import format_weather_stage
+    from skysafe_datalake_spark.streaming.driver import run_flights_stream
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    _, weather_client = fixture_clients(states_payload([]))
+    ingest.extract_weather(spark, cat, weather_client, ts=FIXTURE_TS)
+    format_weather_stage(spark, cat, ts=FIXTURE_TS)
+    weather = cat.read_latest(spark, "formatted", "open_meteo", "weather").drop(
+        "date", "hour"
+    )
+    usage_dir = str(tmp_path / "usage")
+    seen = []
+    for minute, n in ((0, 3), (1, 5)):
+        flights_client, _ = fixture_clients(states_payload(_phase_rows(n)))
+        ts = FIXTURE_TS + timedelta(minutes=minute)
+        ingest.extract_flights(spark, cat, flights_client, ts=ts)
+        q = run_flights_stream(
+            spark,
+            cat.path("raw", "opensky", "flights"),
+            weather,
+            usage_dir,
+            str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        try:
+            assert q.awaitTermination(300), "stream did not drain its backlog"
+        finally:
+            q.stop()
+        usage = spark.read.parquet(usage_dir)
+        seen.append(sorted(r["icao24"] for r in usage.select("icao24").collect()))
+    assert seen == [["1", "2", "3"], ["1", "2", "3", "4", "5"]]
+
+
+def test_raw_write_is_atomic_and_leaves_nothing_behind(spark, tmp_path, monkeypatch):
+    """A raw write whose final rename fails leaves only a hidden temp
+    file; re-running the same minute leaves exactly one data file with
+    the second run's documents and no temp."""
+    from skysafe_datalake_spark import catalog as catalog_mod
+
+    real_hadoop_fs = catalog_mod._hadoop_fs
+    failures = []
+
+    class RenameFailsOnce:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            if not failures:
+                failures.append(dst.getName())
+                raise OSError("rename failed")
+            return self._fs.rename(src, dst)
+
+    def hadoop_fs(spark_, path):
+        fs, jpath = real_hadoop_fs(spark_, path)
+        return RenameFailsOnce(fs), jpath
+
+    monkeypatch.setattr(catalog_mod, "_hadoop_fs", hadoop_fs)
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    first = [{"run": 1, "i": i} for i in range(3)]
+    second = [{"run": 2, "i": i} for i in range(2)]
+    with pytest.raises(OSError, match="rename failed"):
+        ingest.write_raw_payloads(spark, cat, first, "api", "docs", ts=FIXTURE_TS)
+    ingest.write_raw_payloads(spark, cat, second, "api", "docs", ts=FIXTURE_TS)
+
+    part = _raw_partition(cat, "api", "docs")
+    names = sorted(os.listdir(part))
+    data = [n for n in names if not n.startswith(".")]
+    assert len(data) == 1 and data[0] != failures[0], names
+    assert names == [f".{data[0]}.crc", data[0]], names
+    back = cat.read_latest(spark, "raw", "api", "docs", fmt="json", schema="run int, i int")
+    assert sorted(tuple(r)[:2] for r in back.collect()) == [(2, 0), (2, 1)]
+
+
+def test_raw_round_trip_on_a_file_uri_root(spark, tmp_path):
+    """The raw write goes through the Hadoop FileSystem client, so a
+    file:// lake root takes the same path as s3a:// or hdfs://."""
+    from skysafe_datalake_spark.sources import opensky
+
+    cat = LakeCatalog("file://" + str(tmp_path / "lake"))
+    doc = states_payload(_phase_rows(4))
+    path = ingest.write_raw_payloads(spark, cat, [doc], "opensky", "flights", ts=FIXTURE_TS)
+    assert path.startswith("file://")
+    raw = cat.read_latest(
+        spark, "raw", "opensky", "flights", fmt="json", schema=opensky.RAW_SCHEMA
+    ).collect()
+    assert len(raw) == 1 and len(raw[0]["states"]) == 4
+    assert sorted(s[0] for s in raw[0]["states"]) == ["1", "2", "3", "4"]
+
+
+def _fields(schema):
+    return [(f.name, f.dataType, f.nullable) for f in schema]
+
+
+def test_recorded_schema_reads_like_inference(spark, tmp_path):
+    """The writing catalog reads each Parquet layer back with the
+    schema it recorded, without a job; a fresh catalog on the same
+    root infers it. Both give the same schema, partition-column types
+    and rows."""
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
+    fresh = LakeCatalog(str(tmp_path / "lake"))
+    for layer in (
+        ("formatted", "opensky", "flights"),
+        ("formatted", "open_meteo", "weather"),
+        ("enriched", "skysafe", "flights"),
+        ("usage", "skysafe", "flights"),
+    ):
+        tag = "-".join(layer)
+        recorded, jobs = _jobs_in_group(
+            spark, f"test-recorded-{tag}", lambda: cat.read_latest(spark, *layer)
+        )
+        inferred = fresh.read_latest(spark, *layer)
+        assert jobs == 0, layer
+        assert _fields(recorded.schema) == _fields(inferred.schema), layer
+        assert [f.dataType.simpleString() for f in recorded.schema[-2:]] == [
+            "date",
+            "int",
+        ]
+        got = sorted(map(repr, recorded.collect()))
+        assert got and got == sorted(map(repr, inferred.collect())), layer
+
+
+def test_read_latest_infers_when_another_writer_wrote_a_newer_hour(spark, tmp_path):
+    """A recorded schema is only used for the partition it was
+    recorded for: after a second catalog writes a newer hour with an
+    extra column, the first catalog reads that column."""
+    from datetime import datetime, timezone
+
+    root = str(tmp_path / "lake")
+    first, second = LakeCatalog(root), LakeCatalog(root)
+    first.write(
+        spark.createDataFrame([(1,)], "x int"), "formatted", "api", "e",
+        ts=datetime(2026, 2, 26, 8, tzinfo=timezone.utc),
+    )
+    second.write(
+        spark.createDataFrame([(2, "y")], "x int, extra string"), "formatted", "api", "e",
+        ts=datetime(2026, 2, 26, 9, tzinfo=timezone.utc),
+    )
+    latest = first.read_latest(spark, "formatted", "api", "e")
+    assert latest.columns == ["x", "extra", "date", "hour"]
+    assert [tuple(r)[:2] for r in latest.collect()] == [(2, "y")]
+
+
 # ───────────────────── bucketed upsert contract ───────────────────
 
 
