@@ -3,170 +3,14 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
 ONE JSON line with per-query wall seconds.
 
-Each query is executed with a count-style action that forces full
-evaluation of the plan without collecting results to the driver.
-
-Output contract (round 3 shipped `parsed: null` because the one JSON
-line with 127 per-query entries outgrew the driver's stdout tail
-window): the headline set is one representative per operator family
-(~62 queries, full per-query map ~1.8 kB — round 1's 3.4 kB line
-parsed fine), and the COMPLETE per-query detail, including both pass
-samples and the full-registry runs under --all, is written to
-BENCH_DETAIL_r{N}.json in the repo instead of stdout.
-
-Flags / env:
-  --all                     bench every registered query, not just the
-                            headline set (detail file only; the stdout
-                            line stays headline-sized).
-  SPARK_GRAFT_FULL_WARMUP=1 warm up EVERY query at the smallest SF
-                            before timing (maximum-fidelity pass-1
-                            numbers; ~3 min extra wall). The default
-                            bootstrap warm-up primes only the shared
-                            JVM machinery — parquet reader, noop sink,
-                            shuffle, broadcast, streaming state store,
-                            MLlib — and lets min-of-passes absorb each
-                            query's own first-run codegen (the codegen
-                            cache is keyed on generated source, so
-                            pass 2 always reuses pass 1's classes).
-  SPARK_GRAFT_SKIP_WARMUP=1 skip warm-up entirely.
-  SPARK_GRAFT_BENCH_PASSES  timed passes (default 3, min of passes).
-
-Noise telemetry (round 6): this box shares I/O and CPU with noisy
-neighbors, and round 5's headline shifted +18% UNIFORMLY — including
-queries with zero code change — with nothing in the artifact to prove
-it was host load. Every run now records, in both the stdout line
-(`noise`) and the detail file:
-  - `loadavg`: /proc/loadavg (1/5/15-min) sampled before each timed
-    pass and once after the last — rising load across passes marks a
-    contended run;
-  - `canary_sec`: a fixed-cost pure-CPU probe (sum of id*id over a
-    32M-row range, 32 tasks, zero I/O, codegen pre-warmed) timed once
-    per pass. The canary never changes between rounds, so its
-    round-over-round ratio is the host-speed correction factor: a
-    uniform query shift that matches the canary shift is load, not
-    regression.
-Reading it: the run does the cross-round comparison itself (round 7)
-— `noise.canary_ratio_vs_prev` is this run's canary min over the most
-recent prior round's recorded min, `noise.host_speed_mismatch` flags
-ratios past 1.25x (raw deltas not comparable; the normalized ratios
-still are), and a `# canary min ...` stderr line spells it out.
-Within a run, per-pass canary spread is the noise floor for
-single-query samples; `noise.noisy_host` flags THIS run's own
-measurement quality — a canary spread past 1.25x (load swung between
-passes) or a quiet-start gate that gave up waiting — not the
-cross-round speed ratio, which per-pass normalization corrects for
-and which says nothing about whether this run itself was quiet
-(round 10: r9's committed canary came from a loaded host, so a
-genuinely quiet r10 run read 0.7x against it).
-
-Round 9 closes the loop: the run NORMALIZES every per-query delta by
-the canary ratio itself — `normalized_ratio_vs_prev` in the detail
-file maps each query to a host-speed-corrected cur/prev ratio (1.0 =
-unchanged engine cost whatever the host load did; rounds 7 and 8 each
-needed a human to do this division, in opposite directions), and
-queries past 1.25x normalized at >= 0.25 s are flagged in the stdout
-line (`noise.normalized_regressions`) and on stderr.
-
-Round 10 fixes the arithmetic the r9 telemetry showed was unsound
-under INTRA-run load swings: dividing cross-round mins by the
-run-min canary breaks when a query's min sample comes from a loaded
-pass while the canary min came from a quiet one (observed live:
-canary spread 1.465, query samples swinging 4-8x across passes —
-r9's own deltas ended up certified by nothing). The normalization is
-now PER-PASS when both rounds recorded per-pass samples (every
-BENCH_DETAIL since r6 does): each pass's wall is divided by the SAME
-pass's canary, and the min of those canary-relative costs is
-compared across rounds. Under the multiplicative load model
-(wall_i ~= base*load_i, canary_i ~= canary_base*load_i) numerator
-and denominator always share a pass, so the ratio recovers the
-engine cost whatever the load did between passes —
-`noise.normalized_method` records "per_pass" and the flags stay
-reliable under swing load. When the previous round only has
-min-of-passes numbers (driver stdout captures), the old run-min
-arithmetic is the fallback and `normalized_reliable` degrades to the
-canary-spread check exactly as before.
-
-The canary is a single ~0.1 s instant per ~160 s pass, so it can
-spike on a transient the pass's queries never felt (observed live:
-canaries [0.112, 0.105, 0.306] with flat wall profiles — raw
-per-pass quotients then read every pass-3 cost ~3x low). When the
-sample matrix is wide enough (>= 8 queries), the per-pass load
-factor therefore comes from the WALLS themselves (L_i = median over
-queries of wall_i/min_j wall_j, corroborated by ~183 measurements
-instead of one): cost(q) = min_i(wall_i/L_i) over the host speed
-median_i(canary_i/L_i), and `noise.noisy_host` reads the wall-based
-`pass_load_spread` instead of the canary spread. Thin matrices
-(unit fixtures) keep the raw canary-quotient arithmetic.
-
-The canary models CPU speed only, so one blind spot remains even
-per-pass: a query's wall includes FIXED overhead (job scheduling,
-state-store commits) that does not shrink on a quieter host — under
-a cross-round host-speed ratio R < 1, an unchanged query can
-innocently normalize as high as 1/R (measured live: a 0.525x host
-read 17 zero-code-change queries at 1.26-1.43x, all raw-FASTER than
-the prior round). Flags are therefore split: past the bar AND past
-the `noise.innocence_envelope` (max(1, 1/R)) ->
-`normalized_regressions` (attributable); past the bar but within the
-envelope -> `normalized_suspects` (unattributable until re-anchored
-on a comparable-speed host). At R ~= 1 the envelope collapses to 1
-and every above-bar flag is attributable — which is what the loadavg
-gate below is for.
-
-A loadavg gate (round 10, `SPARK_GRAFT_QUIET_LOAD`, default 2.0)
-delays the timed passes until the 1-min loadavg drops below the
-bar — at most `SPARK_GRAFT_QUIET_WAIT` (default 180) seconds — so
-committed records tend to come from quiet hosts in the first place;
-`noise.quiet_start` records what the gate saw and did.
-
-Round 10's sweeps exposed two more comparability traps, both now
-closed. (1) Run shape: a query timed inside a 183-query --all pass
-carries ~12% more JVM/cache pollution than inside a 62-query
-headline pass, so cross-round comparisons prefer a prior record of
-the SAME shape; --all runs also write a durable BENCH_FULL_r{N}.json
-(the driver's round-end headline run overwrites BENCH_DETAIL — how
-the r9 full-registry record was lost from the tree tip). (2) Flag
-jitter: two same-code same-data back-to-back full sweeps produced
-DISJOINT >1.25x flag sets — min-of-3 costs on sub-second queries are
-jitter-dominated — so flagged queries (<= 20) are re-timed in
-dedicated confirmation passes (`SPARK_GRAFT_CONFIRM_PASSES`, default
-3) and a flag survives only if the combined evidence still clears
-the bar and envelope; `noise.regression_confirm` records the passes
-and the washed-out set.
-
-Round 11 makes flag confidence inherit ANCHOR quality (r10 shipped 4
-flags "confirmed" against a noisy_host:true r9 record, none of which
-had any code change): when the previous record's own run was noisy,
-above-bar flags are demoted to `normalized_suspects` and
-confirmation is skipped — the anchor side of the ratio is the
-unreliable half and re-timing the current side cannot repair it
-(`noise.anchor_noisy` records the inheritance). Three more evidence-
-grade fixes land with it: (1) confirmation passes now re-time ~8
-unflagged CONTROL queries alongside the flagged set so the combined
-matrix's confirmation columns carry enough independent walls for
-wall-derived load factors (a loaded confirmation window over a small
-flag set otherwise reads its own inflation as ~1x load and falsely
-confirms jitter); (2) cap-overflow flags that no confirmation pass
-examined land under `noise.regression_confirm.unchecked` instead of
-being merged into `normalized_regressions` as if they were evidence;
-(3) a uniform shift the PREVIOUS record demoted is adjudicated
-retrospectively (`noise.prev_shift_adjudication`): this run's median
-vs that record reads ~1 if the shift was a genuine engine-wide
-change that reproduced (reported as `noise.engine_wide_regression` —
-previously such a regression would be demoted every round forever)
-and ~1/shift if it was host inflation unwinding.
-
-The detail file also carries `e2e_stage_sec` — per-stage wall
-seconds inside the composite `batch_pipeline_e2e` row, so a
-regression there is attributable to a DAG stage. Since round 11 the
-stages come from the pass that produced the recorded MIN wall (the
-last pass shipped a loaded 21.6 s `combine` attribution against the
-clean r10 record's own 15.9 s min); since round 12 a positive gap
-between the stage sum and that wall (session/scan work between stage
-timers) is its own `inter_stage_overhead` key. Since round 14 the
-flights and weather legs run concurrently, so their stage walls
-overlap and the stage sum can exceed the wall; the table then holds
-no residual and sums to more than the wall. Read it as per-stage
-walls, not as a partition of the wall.
+Each query is timed from plan construction through a ``noop`` write
+(the whole plan runs, no rows reach the driver), in PASSES interleaved
+passes over the query list; the min of its passes is reported, so a
+host stall costs at most one sample per query. The stdout line holds
+the headline map only (~1.8 kB); every pass's samples go to
+BENCH_DETAIL_r{N}.json in the repo, and ``--all`` times every
+registered query into that file. These are isolated single-query
+walls: the numbers of record come from ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -306,759 +150,34 @@ def _round_number(repo_root: str) -> int:
     return latest + 1
 
 
-def _loadavg() -> list[float] | None:
-    """1/5/15-minute load averages, or None off-Linux."""
-    try:
-        with open("/proc/loadavg") as f:
-            return [float(x) for x in f.read().split()[:3]]
-    except (OSError, ValueError):
-        return None
+PASSES = 3
+
+# Warm-up at the smallest sibling sf* dir: one query per piece of shared
+# JVM machinery (parquet scan + noop sink + shuffle, broadcast join,
+# streaming state store + file sink, the minute pipeline's driver-side
+# model fit). Per-query codegen is not pre-warmed: it lands on timed
+# pass 1, and the min reports a later pass that reuses its classes.
+BOOTSTRAP = [
+    "pricing_summary",
+    "nn_station_join",
+    "streaming_dedup_watermark",
+    "skysafe_ml_pipeline",
+]
 
 
-def _await_quiet_host(
-    threshold: float, max_wait: float, poll: float = 15.0
-) -> dict:
-    """Delay the timed passes until the 1-min loadavg drops below
-    ``threshold``, waiting at most ``max_wait`` seconds (then proceed
-    anyway — the canary telemetry still records the contention). Both
-    committed full sweeps since r7 ran on loaded hosts; starting quiet
-    is cheaper than correcting afterwards. Returns the record for
-    ``noise.quiet_start``."""
-    start_la = _loadavg()
-    waited = 0.0
-    la = start_la
-    while (
-        la is not None
-        and la[0] >= threshold
-        and waited < max_wait
-    ):
-        step = min(poll, max_wait - waited)
-        time.sleep(step)
-        waited += step
-        la = _loadavg()
-    out = {
-        "threshold": threshold,
-        "waited_sec": round(waited, 1),
-        "loadavg_before": start_la,
-        "loadavg_after": la,
-        "gave_up": bool(la is not None and la[0] >= threshold),
-    }
-    if waited:
-        print(
-            f"# quiet-start gate: waited {out['waited_sec']}s for "
-            f"loadavg < {threshold} (start {start_la}, now {la})"
-            + (" — GAVE UP, proceeding loaded" if out["gave_up"] else ""),
-            file=sys.stderr,
-        )
-    return out
-
-
-def _canary(spark) -> float:
-    """Fixed-cost host-speed probe: pure-CPU sum over a 32M-row range
-    in 32 tasks, zero I/O, one row to the driver. The work NEVER
-    changes, so wall time moves only with host contention — run once
-    per timed pass, its spread is the run's noise floor and its
-    round-over-round ratio the host-speed correction factor. The
-    modulus keeps the 32M-term sum inside bigint under ANSI mode
-    (a raw sum(id*id) peaks ~1e22 and overflows)."""
-    t0 = time.perf_counter()
-    spark.range(0, 32_000_000, 1, 32).selectExpr(
-        "sum((id * id) % 1000003) AS s", "count(*) AS c"
-    ).collect()
-    return round(time.perf_counter() - t0, 3)
-
-
-# Past this canary-min ratio vs the previous round, RAW per-query
-# deltas are host speed until proven otherwise
-# (`host_speed_mismatch`). Rounds 7 (1.4x load, raw ratios overstated
-# regressions) and 8 (0.694x quieter host, raw ratios flattered by
-# ~30%) proved raw deltas mislead in BOTH directions, so the flag
-# trips at the same 1.25x bar the normalized per-query regression
-# list uses — past it, read ONLY the canary-normalized ratios. The
-# same bar bounds the intra-run canary spread (`noisy_host`): past
-# it, the load swung WITHIN the run and even this run's own samples
-# disagree about the host they measured.
-_NOISY_HOST_RATIO = 1.25
-
-# A query whose canary-NORMALIZED round-over-round ratio exceeds this
-# is called out as a regression (host speed already divided out).
-_NORMALIZED_REGRESSION_RATIO = 1.25
-
-# ...but only when the query is big enough to measure: below a quarter
-# second, min-of-passes samples sit inside the host's own pass-to-pass
-# jitter and the ratio is noise, not signal.
-_REGRESSION_MIN_SEC = 0.25
-
-
-def _prev_round_data(repo_root: str, rnd: int, run_all: bool | None = None):
-    """(parsed JSON, round, filename) from the most recent prior round
-    that recorded noise telemetry, else (None, None, None).
-
-    When ``run_all`` is given, records of the SAME run shape win: a
-    query timed inside a 183-query pass carries ~12% more JVM/cache
-    pollution than the same query inside a 62-query headline pass
-    (measured r9: headline-62 total 74.5 s within the full sweep vs
-    67.2 s headline-only; the first full-vs-headline normalization in
-    r10 flagged 15 zero-code-change queries at median 1.119 on a
-    comparable-speed host), so cross-shape ratios read sweep shape,
-    not engine cost. Within a shape, prefer BENCH_FULL (a --all run's
-    durable copy — the driver's round-end headline run overwrites
-    BENCH_DETAIL, which is how the r9 full-registry record was lost
-    from the tree tip), then BENCH_DETAIL, then the driver's
-    BENCH_r{N}.json stdout capture; when no same-shape record exists
-    for a round, fall back to any record with telemetry rather than
-    skipping the round (a biased-but-qualified comparison beats
-    none).
-
-    One trap in the shape preference: the shape-matched winner can be
-    a SAMPLE-LESS stdout capture (e.g. a headline run following a
-    round whose only surviving per-pass record is an --all sweep),
-    which silently downgrades normalization to the run_min fallback
-    the module docstring documents as unsound under intra-run load
-    swings — even though a per-pass-capable record of the other shape
-    exists. The shape match still wins (the ~12% shape bias is
-    uniform and sits uncomfortably close to the 15% uniform-shift
-    bar), but the downgrade is LOGGED and recorded on the returned
-    data under ``_selection`` so the caller surfaces it in the noise
-    block — the weaker estimator must not be chosen invisibly."""
-    for prev in range(rnd - 1, 0, -1):
-        candidates = []
-        for fname in (
-            f"BENCH_FULL_r{prev:02d}.json",
-            f"BENCH_DETAIL_r{prev:02d}.json",
-            f"BENCH_r{prev:02d}.json",
-        ):
-            path = os.path.join(repo_root, fname)
-            try:
-                with open(path) as f:
-                    data = json.load(f)
-            except (OSError, ValueError):
-                continue
-            canaries = (data.get("noise") or {}).get("canary_sec") or []
-            try:
-                min(float(c) for c in canaries)
-            except (TypeError, ValueError):
-                continue
-            candidates.append((data, prev, fname))
-        if candidates:
-            pick = candidates[0]
-            if run_all is not None:
-                same = [
-                    c for c in candidates
-                    if bool(c[0].get("all")) == run_all
-                ]
-                if same:
-                    pick = same[0]
-            if not pick[0].get("samples"):
-                with_samples = [
-                    c for c in candidates if c[0].get("samples")
-                ]
-                if with_samples:
-                    pick[0]["_selection"] = {
-                        "method_downgrade": "run_min",
-                        "per_pass_alternative": with_samples[0][2],
-                        "reason": (
-                            "shape-matched record has no per-pass samples"
-                        ),
-                    }
-                    print(
-                        f"# prev-round pick {pick[2]} matches this run's "
-                        "shape but carries no per-pass samples — "
-                        "normalization degrades to run_min even though "
-                        f"{with_samples[0][2]} (other shape, ~12% shape "
-                        "bias) has per-pass records",
-                        file=sys.stderr,
-                    )
-            return pick
-    return None, None, None
-
-
-def _prev_canary_min(repo_root: str, rnd: int):
-    """(min canary sec, round, filename) — see _prev_round_data."""
-    data, prev, fname = _prev_round_data(repo_root, rnd)
-    if data is None:
-        return None, None, None
-    canaries = data["noise"]["canary_sec"]
-    return min(float(c) for c in canaries), prev, fname
-
-
-# Below this many queries the per-pass load factor estimated from the
-# walls themselves is too thin (a single query's pass-to-pass ratios
-# are its OWN noise, not the host's) — fall back to raw canary
-# quotients.
-_MIN_QUERIES_FOR_WALL_LOAD = 8
-
-
-def _pass_load_factors(samples: dict[str, list]) -> list[float] | None:
-    """Per-pass load factor estimated from the query walls themselves:
-    L_i = median over queries of wall_i / min_j wall_j (>= 1, and 1.0
-    for the run's quietest pass). The canary is a single ~0.1 s instant
-    per ~160 s pass, so it can spike on a transient the pass's queries
-    never felt (observed live: canaries [0.112, 0.105, 0.306] while
-    every wall profile stayed flat — raw per-pass quotients then read
-    every pass-3 cost ~3x low and the sweep's normalized median hit
-    0.376 on unchanged code) or sample a quiet instant inside a loaded
-    pass. The median over the full query set is corroborated by ~183
-    measurements instead of one. Returns None when the matrix is too
-    thin to trust (< _MIN_QUERIES_FOR_WALL_LOAD usable queries)."""
-    usable: dict[str, list[float]] = {}
-    n_passes = 0
-    for name, walls in samples.items():
-        try:
-            w = [float(x) for x in walls]
-        except (TypeError, ValueError):
-            continue
-        if w and min(w) > 0:
-            usable[name] = w
-            n_passes = max(n_passes, len(w))
-    if len(usable) < _MIN_QUERIES_FOR_WALL_LOAD or n_passes == 0:
-        return None
-    factors: list[float] = []
-    for i in range(n_passes):
-        ratios = [
-            w[i] / min(w) for w in usable.values() if i < len(w)
-        ]
-        if not ratios:
-            return None  # ragged matrix: don't guess
-        factors.append(_median(ratios))
-    return factors
-
-
-def _per_pass_costs(
-    samples: dict[str, list],
-    canaries: list,
-    load_samples: dict[str, list] | None = None,
-) -> dict[str, float]:
-    """Host-speed-relative per-query cost, robust to load swinging
-    BETWEEN passes and to unrepresentative canary instants.
-
-    ``load_samples`` optionally restricts which queries' walls feed
-    the per-pass load factors (costs are still computed for every
-    query in ``samples``). The confirmation path uses this to keep
-    the flagged queries — whose walls are exactly what's in question
-    — out of the load medians for their own confirmation columns: a
-    loaded confirmation window over a flag-dominated column otherwise
-    reads its own inflation as ~1x load and falsely confirms jitter
-    (the r11 control machinery capped controls at 8 while the flag
-    set could reach 40, so flags still dominated the median).
-
-    With a wide-enough sample matrix the per-pass load factor comes
-    from the walls themselves (see _pass_load_factors): cost(q) =
-    min_i(wall_i / L_i) — per-query stalls are one-sided high, min
-    discards them — divided by the run's host speed estimated as
-    median_i(canary_i / L_i) (median, not min: a canary instant that
-    spiked, or one that sampled a quiet moment of a loaded pass,
-    lands in the tails). Under the multiplicative load model this
-    recovers base_cost/canary_base whatever the load did — the r9
-    failure (min wall from a loaded pass over the min canary from a
-    quiet one) and the r10 failure (a transient canary spike reading
-    a steady pass 3x cheap) both cancel.
-
-    Pass 1 deliberately carries each query's first-run codegen (the
-    bootstrap warm-up primes shared machinery only) — a PER-QUERY
-    heterogeneous inflation (live records read L_1 ~= 1.7 on quiet
-    hosts) that no uniform load factor models — so with >= 3 passes
-    the cost min runs over the steady passes 2..n only; the host
-    median still uses every pass (pass 1's codegen-inflated L_1 only
-    biases its corrected canary low, and the median shrugs off one
-    tail value).
-
-    With a thin matrix (single-query runs, unit fixtures) L is
-    unknowable and each pass's wall is divided by the SAME pass's
-    canary, min of quotients — the r9-era arithmetic, still sound for
-    whole-pass load tracked by the canary."""
-    load = _pass_load_factors(
-        samples if load_samples is None else load_samples
-    )
-    host = None
-    if load is not None:
-        corrected = []
-        for i, c in enumerate(canaries):
-            try:
-                c_f = float(c)
-            except (TypeError, ValueError):
-                continue
-            if c_f > 0 and i < len(load) and load[i] > 0:
-                corrected.append(c_f / load[i])
-        if corrected:
-            host = _median(corrected)
-    first_steady = 1 if (host is not None and len(canaries) >= 3) else 0
-    costs: dict[str, float] = {}
-    for name, walls in samples.items():
-        vals = []
-        for i in range(first_steady, len(walls)):
-            try:
-                w = float(walls[i])
-            except (TypeError, ValueError):
-                continue
-            if w < 0:
-                continue
-            if host is not None:
-                if i < len(load) and load[i] > 0:
-                    vals.append(w / load[i] / host)
-            else:
-                try:
-                    c_f = float(canaries[i])
-                except (IndexError, TypeError, ValueError):
-                    continue
-                if c_f > 0:
-                    vals.append(w / c_f)
-        if vals:
-            costs[name] = min(vals)
-    return costs
-
-
-def _normalized_ratios_per_pass(
-    cur_samples: dict[str, list],
-    cur_canaries: list,
-    prev_samples: dict[str, list],
-    prev_canaries: list,
-) -> dict[str, float]:
-    """Per-query regression signal from per-pass records on BOTH
-    sides: min_i(cur_i/canary_i) / min_j(prev_j/canary_j). 1.0 =
-    unchanged engine cost whatever the load did, between rounds or
-    WITHIN either run."""
-    cur_costs = _per_pass_costs(cur_samples, cur_canaries)
-    prev_costs = _per_pass_costs(prev_samples, prev_canaries)
-    out: dict[str, float] = {}
-    for name, c in cur_costs.items():
-        p = prev_costs.get(name)
-        if p and p > 0:
-            out[name] = round(c / p, 3)
-    return out
-
-
-def _normalized_ratios(
-    cur: dict, prev: dict, canary_ratio: float | None
-) -> dict[str, float]:
-    """Fallback per-query regression signal when the previous round
-    recorded only min-of-passes numbers (no per-pass samples):
-    (cur_sec / prev_sec) / canary_ratio, for every query present in
-    both rounds. The canary is a fixed-cost probe, so its cross-round
-    ratio IS the host-speed factor — dividing it out is the manual
-    arithmetic rounds 7 and 8 each needed a human for, done in the
-    artifact itself. 1.0 = unchanged engine cost regardless of how
-    differently loaded the two hosts were. Caveat (the r9 hole, fixed
-    by the per-pass path): mins can come from differently-loaded
-    passes, so these ratios are only reliable when the intra-run
-    canary spread is small."""
-    if not prev or not canary_ratio or canary_ratio <= 0:
-        return {}
-    out: dict[str, float] = {}
-    for name, c in cur.items():
-        p = prev.get(name)
-        try:
-            c_f, p_f = float(c), float(p)
-        except (TypeError, ValueError):
-            continue
-        if p_f > 0 and c_f >= 0:
-            out[name] = round((c_f / p_f) / canary_ratio, 3)
-    return out
-
-
-def _innocence_envelope(canary_ratio: float | None) -> float:
-    """Largest normalized ratio a behaviorally-unchanged query can
-    innocently show, given the cross-round host-speed ratio R
-    (canary_cur/canary_prev). The canary is pure CPU, but a query's
-    wall is fixed overhead (job scheduling, state-store commits,
-    driver latency) + CPU work — only the CPU part tracks the canary.
-    On a quieter host (R < 1) an all-fixed-overhead query's wall
-    doesn't shrink at all, so its normalized ratio reads 1/R with no
-    engine change (measured live: a 0.525x host flagged 17
-    zero-code-change queries in the 1.26-1.43 band, every one raw-
-    FASTER than the prior round). On a more-loaded host (R > 1) fixed
-    overhead only flatters the normalized ratio, so the envelope is 1
-    and every above-bar flag is attributable. Keeping R near 1 is the
-    quiet-start gate's job — that's what makes the flags sharp."""
-    if not canary_ratio or canary_ratio <= 0:
-        return 1.0
-    return max(1.0, 1.0 / canary_ratio)
-
-
-def _flag_regressions(
-    normalized: dict[str, float],
-    cur: dict,
-    prev: dict | None = None,
-    threshold: float = _NORMALIZED_REGRESSION_RATIO,
-    min_sec: float = _REGRESSION_MIN_SEC,
-) -> dict[str, float]:
-    """Queries whose normalized ratio exceeds the threshold AND whose
-    wall time is big enough to measure in BOTH rounds (a jitter-lucky
-    0.05 s prev sample against a 0.30 s current one is a 6x ratio made
-    entirely of the noise the floor exists to suppress), worst-first.
-    Callers split the result against _innocence_envelope before
-    calling anything a regression."""
-    prev = prev or {}
-
-    def _big(d, n):
-        try:
-            return float(d.get(n, 0) or 0) >= min_sec
-        except (TypeError, ValueError):
-            return False
-
-    flagged = {
-        n: r
-        for n, r in normalized.items()
-        if r > threshold and _big(cur, n) and (not prev or _big(prev, n))
-    }
-    return dict(sorted(flagged.items(), key=lambda kv: -kv[1]))
-
-
-# A median normalized ratio farther than this from 1.0 — across the
-# whole compared query set — is a host-condition artifact by
-# definition: 183 unrelated queries do not all regress together, and
-# a genuine engine-wide change reproduces across runs while host
-# degradation does not. Observed live: external contention arriving
-# mid-sweep (loadavg 0.4 -> 6.7) inflated every wall ~25-35% while
-# the pure-CPU canary READ FAST (0.088s min) — 110 spurious per-query
-# "regressions" at median 1.35, which same-host confirmation passes
-# then "confirmed" because the degradation was still there.
-_UNIFORM_SHIFT_BAR = 0.15
-_UNIFORM_SHIFT_MIN_QUERIES = 20
-
-
-def _median(vals) -> float | None:
-    vals = sorted(vals)
-    if not vals:
-        return None
-    mid = len(vals) // 2
-    return vals[mid] if len(vals) % 2 else (vals[mid - 1] + vals[mid]) / 2
-
-
-def _uniform_shift(normalized: dict[str, float]) -> float | None:
-    """Median normalized ratio when it reveals a host-level shift the
-    canary missed (|median - 1| > bar over a wide-enough set), else
-    None. Per-query attribution REQUIRES the bulk of the set near 1.0
-    — when the whole distribution moved, individual above-bar flags
-    are unattributable (and re-measuring on the same degraded host
-    cannot attribute them either, so confirmation is skipped too).
-
-    A demoted shift is NOT forgotten: a genuine engine-wide
-    regression (shared codegen/scan machinery slowing every query)
-    would trip this guard every round and never reach
-    `normalized_regressions`, so the NEXT round's run adjudicates it
-    retrospectively via _adjudicate_prev_shift — the shift either
-    persists into the new anchor (engine-wide: report it) or
-    evaporates (host artifact: close it)."""
-    if len(normalized) < _UNIFORM_SHIFT_MIN_QUERIES:
-        return None
-    med = _median(normalized.values())
-    return round(med, 3) if abs(med - 1.0) > _UNIFORM_SHIFT_BAR else None
-
-
-# Tolerance for reading the next round's median as "the shift stuck"
-# (engine-wide) vs "the shift evaporated" (host artifact).
-_SHIFT_ADJUDICATION_TOL = 0.10
-
-
-def _adjudicate_prev_shift(
-    prev_noise: dict | None,
-    cur_median: float | None,
-    cur_run_noisy: bool = False,
-) -> dict | None:
-    """Retrospective verdict on a uniform_shift the PREVIOUS round's
-    record demoted wholesale. The uniform-shift guard cannot tell
-    host degradation from a genuine engine-wide regression within one
-    run — both shift every query — but the two diverge one round
-    later, and this run vs that record is exactly the re-run that
-    distinguishes them. Let U be the prev record's demoted shift and
-    M this run's median normalized ratio vs that record:
-
-    - M ~= 1: the shifted level REPRODUCED — this run, on its own
-      host, lands where the shifted record did. The prev shift was an
-      engine-wide change that is now baked into the anchor; report it
-      as `engine_wide_regression` instead of letting it vanish into
-      noise telemetry (the silent-demotion hole: a real engine-wide
-      slowdown reproduces against a pre-regression anchor every run
-      and would otherwise NEVER appear in normalized_regressions).
-    - M ~= 1/U: the shift EVAPORATED — the prev record's walls were
-      inflated by host conditions this run doesn't share, and the
-      inverse shift is the inflation unwinding. Host artifact;
-      closed.
-    - anything else: ambiguous (e.g. this run is itself shifted) —
-      carried for the next clean run to settle.
-
-    A run that flagged ITSELF noisy cannot adjudicate either way —
-    its median is the unreliable half of the read — so
-    ``cur_run_noisy`` forces the verdict to ambiguous (with the
-    reason recorded), the same demotion discipline applied to
-    per-query flags everywhere else in this module. Symmetrically, a
-    PREV record that marked its own run noisy recorded its shift off
-    walls it itself distrusts (current writers park such shifts under
-    `uniform_shift_vs_noisy_anchor`, which this function ignores, but
-    pre-r12 records can carry the unqualified key) — forced to
-    ambiguous with reason `prev_run_noisy`.
-
-    Returns the adjudication dict, or None when the prev record
-    carries no uniform_shift or there's no current median to read."""
-    prev_shift = (prev_noise or {}).get("uniform_shift")
-    try:
-        u = float(prev_shift)
-    except (TypeError, ValueError):
-        return None
-    if cur_median is None or u <= 0:
-        return None
-    out = {
-        "prev_shift": u,
-        "cur_median_vs_prev": round(cur_median, 3),
-    }
-    persisted = abs(cur_median - 1.0) <= _SHIFT_ADJUDICATION_TOL
-    evaporated = abs(cur_median - 1.0 / u) <= _SHIFT_ADJUDICATION_TOL
-    if cur_run_noisy:
-        out["verdict"] = "ambiguous"
-        out["reason"] = "cur_run_noisy"
-    elif (prev_noise or {}).get("noisy_host"):
-        out["verdict"] = "ambiguous"
-        out["reason"] = "prev_run_noisy"
-    elif persisted and evaporated:
-        # Modest shifts (e.g. u = 1.18 -> 1/u = 0.847) leave the two
-        # tolerance bands overlapping on [0.9, 0.947]; a median inside
-        # the overlap is consistent with BOTH hypotheses and must not
-        # be silently resolved by elif order.
-        out["verdict"] = "ambiguous"
-        out["reason"] = "bands_overlap"
-    elif persisted:
-        out["verdict"] = "engine_wide_persisted"
-    elif evaporated:
-        out["verdict"] = "host_artifact_evaporated"
-    else:
-        out["verdict"] = "ambiguous"
-    return out
-
-
-# Upper wall bound for preferred confirmation controls: re-timing
-# e.g. the 16 s composite e2e row 3x just to read host load would
-# dominate the confirmation window's cost for no extra signal.
-_CONTROL_MAX_SEC = 3.0
-
-
-def _confirmation_controls(
-    samples: dict[str, list],
-    flagged: set,
-    n_controls: int = _MIN_QUERIES_FOR_WALL_LOAD,
-) -> list[str]:
-    """UNFLAGGED queries to re-time alongside the flagged set in the
-    confirmation passes, purely to anchor those passes' load factors.
-    ``flagged`` is every query currently above the bar — confirmed
-    candidates, envelope suspects, and cap-overflow flags alike: a
-    query whose wall is in question cannot anchor anyone's load.
-
-    Without them the combined matrix's confirmation columns carry
-    walls only for the flagged queries — often fewer than
-    _MIN_QUERIES_FOR_WALL_LOAD, the module's own bar for trusting
-    wall-derived load — so the per-pass load factor for those columns
-    is a thin, self-referential median over the very queries being
-    judged: a loaded confirmation window over a mostly-jitter flag
-    set reads its own inflation as ~1x load and falsely 'confirms'
-    jitter flags. Controls are chosen from queries measurable above
-    the jitter floor yet cheap to re-time (min wall in
-    [_REGRESSION_MIN_SEC, _CONTROL_MAX_SEC]), most
-    pass-to-pass-stable first (their ratio-to-own-min in a
-    confirmation column is then almost pure load), cheapest on ties;
-    if too few land in the band, the walls nearest the band fill in.
-    Their samples enter the combined matrix (so _pass_load_factors
-    sees >= n_controls independent walls per confirmation column) but
-    they are never candidates for confirmation verdicts."""
-    in_band = []
-    out_of_band = []
-    for name, walls in samples.items():
-        if name in flagged:
-            continue
-        try:
-            w = [float(x) for x in walls]
-        except (TypeError, ValueError):
-            continue
-        if not w or min(w) <= 0:
-            continue
-        # Steady passes only: pass 1 carries first-run codegen, which
-        # would read as instability in a query that is rock-steady.
-        steady = w[1:] if len(w) >= 3 else w
-        spread = max(steady) / min(steady)
-        lo = min(w)
-        if _REGRESSION_MIN_SEC <= lo <= _CONTROL_MAX_SEC:
-            in_band.append((spread, lo, name))
-        else:
-            dist = (
-                _REGRESSION_MIN_SEC - lo
-                if lo < _REGRESSION_MIN_SEC
-                else lo - _CONTROL_MAX_SEC
-            )
-            out_of_band.append((dist, name))
-    in_band.sort()
-    controls = [name for _, _, name in in_band[:n_controls]]
-    if len(controls) < n_controls:
-        out_of_band.sort()
-        controls += [
-            name for _, name in out_of_band[: n_controls - len(controls)]
-        ]
-    return controls
-
-
-def _min_pass_stage_sec(
-    stage_dicts: list[dict], walls: list[float]
-) -> dict | None:
-    """Stage attribution from the pass that produced the MIN wall —
-    the pass the recorded bench number actually comes from. Taking
-    the last pass's stages instead (the pre-r11 behavior) let a
-    loaded final pass misattribute: the clean r10 full record carried
-    `combine: 21.6 s` (stage sum ~32.7 s) against the same record's
-    15.9 s min wall. Pairs stage dicts positionally with the per-pass
-    walls; empty stage dicts (a pass where capture failed) are never
-    picked.
-
-    The instrumented stages cover the DAG work only; session reuse
-    checks, raw-layer scans between stages, and the write of the
-    stage-timing sidecar itself run between the stage timers (the r11
-    record read 11.59 s of stages against a 13.19 s wall, ~12%
-    unattributed). A positive residual is recorded under
-    `inter_stage_overhead`. The flights and weather legs overlap
-    (since r14), so the stage sum may exceed the wall; no residual is
-    recorded then, and the table sums to more than the wall it
-    annotates."""
-    pairs = [
-        (w, d)
-        for w, d in zip(walls, stage_dicts)
-        if d
+def _warm_dir(sf_dir: str) -> str:
+    parent = os.path.dirname(sf_dir.rstrip("/"))
+    sfs = [
+        d for d in (os.listdir(parent) if os.path.isdir(parent) else [])
+        if d.startswith("sf")
+        and os.path.isdir(os.path.join(parent, d))
+        and _sf_value(d) is not None
     ]
-    if not pairs:
-        return None
-    wall, stages = min(pairs, key=lambda p: p[0])
-    out = dict(stages)
-    try:
-        residual = float(wall) - sum(float(v) for v in out.values())
-    except (TypeError, ValueError):
-        return out
-    if residual > 0:
-        out["inter_stage_overhead"] = round(residual, 3)
-    return out
+    return os.path.join(parent, min(sfs, key=_sf_value)) if sfs else sf_dir
 
 
-def _confirm_flags(
-    flagged: dict[str, float],
-    samples: dict[str, list],
-    canary_sec: list,
-    extra_samples: dict[str, list],
-    extra_canaries: list,
-    prev_samples: dict[str, list],
-    prev_canaries: list,
-    envelope: float,
-    threshold: float = _NORMALIZED_REGRESSION_RATIO,
-    load_exclude: set | None = None,
-) -> tuple[dict[str, float], dict[str, float]]:
-    """(confirmed, washed_out) split of regression flags after a
-    targeted confirmation pass. Two same-code same-data back-to-back
-    full sweeps produced DISJOINT >1.25x flag sets (r10, 27 vs 17
-    flags, ~zero overlap) — min-of-3 per-pass costs on sub-second
-    queries are jitter-dominated, so a flag from the main passes is a
-    hypothesis, not evidence. The confirmation passes re-time ONLY
-    the flagged queries minutes later (fresh per-pass canaries, same
-    arithmetic); the flag survives only if the min canary-relative
-    cost over ALL samples — main + confirmation — still exceeds the
-    bar. A stall or loaded pass that manufactured the flag washes out
-    (the extra samples beat it); a real plan regression reproduces.
-
-    ``load_exclude`` (default: the flagged set) names the queries
-    whose walls must not feed the per-pass load factors — every
-    above-bar query, not just the slice being confirmed. The load
-    medians then come from the unflagged population alone: in the
-    main columns that is the near-full registry, in the confirmation
-    columns it is exactly the rider controls. Without the exclusion a
-    flag set larger than the control count dominates the confirmation
-    columns' median, so a loaded window over mostly-jitter flags
-    reads its own inflation as ~1x load and falsely confirms them —
-    scaling controls 1:1 with a 40-flag cap would triple the
-    confirmation window's cost instead."""
-    confirmed: dict[str, float] = {}
-    washed: dict[str, float] = {}
-    # Costs are computed over the FULL matrices, not a flagged-only
-    # slice: the wall-corroborated load factors need the whole query
-    # set, and slicing would silently flip the prev side to the
-    # thin-matrix canary-quotient fallback while the main normalized
-    # map used wall-load costs — two different estimators on the two
-    # sides of one ratio.
-    comb_samples = {
-        n: list(w or []) + list(extra_samples.get(n) or [])
-        for n, w in samples.items()
-    }
-    comb_canaries = list(canary_sec) + list(extra_canaries)
-    if load_exclude is None:
-        load_exclude = set(flagged)
-    load_samples = {
-        n: w for n, w in comb_samples.items() if n not in load_exclude
-    }
-    cur_costs = _per_pass_costs(
-        comb_samples, comb_canaries, load_samples=load_samples
-    )
-    prev_costs = _per_pass_costs(prev_samples, prev_canaries)
-    for name, first_ratio in flagged.items():
-        c, p = cur_costs.get(name), prev_costs.get(name)
-        if not c or not p or p <= 0:
-            confirmed[name] = first_ratio  # can't re-check: keep it
-            continue
-        ratio = round(c / p, 3)
-        if ratio > threshold and ratio > envelope:
-            confirmed[name] = ratio
-        else:
-            washed[name] = ratio
-    return (
-        dict(sorted(confirmed.items(), key=lambda kv: -kv[1])),
-        dict(sorted(washed.items(), key=lambda kv: -kv[1])),
-    )
-
-
-def _canary_comparison(
-    canary_sec: list[float], repo_root: str, rnd: int, prev_lookup=None
-) -> dict:
-    """Cross-round host-speed comparison, ready to embed in `noise`.
-
-    Rounds 5-6 both needed a human to divide canary mins across
-    detail files before reading per-query deltas; this does the
-    division and flags `host_speed_mismatch` so the artifact itself
-    says whether RAW timings are comparable to last round's. The flag
-    is TWO-SIDED: a 0.7x quieter host distorts raw deltas exactly as
-    much as a 1.4x loaded one (r8 vs r7), just flattering instead of
-    inflating. It is a COMPARABILITY flag, not a quality flag: a
-    quiet run after a loaded round reads far from 1.0 through no
-    fault of its own (r10 vs r9), and per-pass normalization corrects
-    the mismatch arithmetically. THIS run's own quality is
-    `noisy_host`: the intra-run canary spread past the same bar means
-    the load swung between passes and the run's samples disagree
-    about the host they measured (the caller also ORs in a quiet-
-    start gate that gave up waiting). ``prev_lookup`` lets the caller
-    pass an already-loaded (data, round, file) triple so the
-    prior-round files are walked once per run."""
-    out: dict = {"canary_min": min(canary_sec) if canary_sec else None}
-    # Intra-run load swing detector: normalization divides by the MIN
-    # canary, but a query's min sample can come from a DIFFERENT,
-    # loaded pass — observed live: canaries [0.12, 0.06, 0.113] while
-    # loadavg rose 2.3 -> 5.0 flagged 17 spurious "regressions"
-    # including a behaviorally-unchanged query at 1.49x. A wide
-    # canary spread within one run marks the normalized ratios
-    # themselves as unreliable.
-    if canary_sec and min(canary_sec) > 0:
-        out["canary_spread"] = round(max(canary_sec) / min(canary_sec), 3)
-        out["noisy_host"] = out["canary_spread"] > _NOISY_HOST_RATIO
-    if prev_lookup is None:
-        prev_lookup = _prev_round_data(repo_root, rnd)
-    prev_data, prev_rnd, prev_file = prev_lookup
-    prev_min = None
-    if prev_data is not None:
-        try:
-            prev_min = min(
-                float(c) for c in prev_data["noise"]["canary_sec"]
-            )
-        except (KeyError, TypeError, ValueError):
-            prev_min = None
-    if prev_min is None or not canary_sec or prev_min <= 0:
-        out["prev_canary"] = None
-        return out
-    ratio = round(out["canary_min"] / prev_min, 3)
-    out["prev_canary"] = {"round": prev_rnd, "file": prev_file, "min": prev_min}
-    out["canary_ratio_vs_prev"] = ratio
-    out["host_speed_mismatch"] = (
-        ratio > _NOISY_HOST_RATIO or ratio < 1 / _NOISY_HOST_RATIO
-    )
-    return out
+def _run(query, spark, sf_dir: str) -> None:
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -1066,609 +185,62 @@ def main() -> None:
     from skysafe_datalake_spark.workload import QUERIES
 
     repo_root = os.path.dirname(os.path.abspath(__file__))
-    run_all = "--all" in sys.argv[1:] or os.environ.get(
-        "SPARK_GRAFT_BENCH_ALL"
-    ) == "1"
-    n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
-
-    # Loadavg gate BEFORE the session/warm-up (afterwards the 1-min
-    # loadavg mostly reads our own warm-up and we'd wait on our own
-    # wake). SPARK_GRAFT_QUIET_LOAD=0 disables.
-    quiet_load = float(os.environ.get("SPARK_GRAFT_QUIET_LOAD", "2.0"))
-    quiet_wait = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT", "180"))
-    quiet_start = (
-        _await_quiet_host(quiet_load, quiet_wait) if quiet_load > 0 else None
-    )
-
+    run_all = "--all" in sys.argv[1:]
     spark = get_spark(app_name="skysafe-bench", master=f"local[{CPUS}]")
     headline = [n for n in HEADLINE if n in QUERIES]
     names = list(QUERIES) if run_all else headline
 
-    # Warm-up at the smallest SF so the timed passes measure the
-    # engine's steady-state throughput rather than one-time JVM setup
-    # billed to whichever query runs first. Default is a BOOTSTRAP
-    # warm-up: one representative per piece of shared machinery
-    # (parquet scan + noop sink + shuffle, broadcast join, streaming
-    # state store + file sink, MLlib). Per-query codegen is NOT
-    # pre-warmed — it lands on timed pass 1 and min-of-passes reports
-    # pass 2, which reuses pass 1's codegen cache — trading slightly
-    # noisier pass-1 samples for ~3 min of wall
-    # (SPARK_GRAFT_FULL_WARMUP=1 restores the full pre-warm). The
-    # warm-up dir is derived from SF_DIR (sibling smallest sf*),
-    # overridable via SPARK_GRAFT_WARM_DIR, and falls back to SF_DIR
-    # itself (which inflates warm-up wall time — hence the log line).
-    bootstrap = [
-        "pricing_summary",
-        "nn_station_join",
-        "streaming_dedup_watermark",
-        "skysafe_ml_pipeline",
-    ]
-    if os.environ.get("SPARK_GRAFT_SKIP_WARMUP") == "1":
-        print("# warm-up skipped (SPARK_GRAFT_SKIP_WARMUP=1)", file=sys.stderr)
-    else:
-        full = os.environ.get("SPARK_GRAFT_FULL_WARMUP") == "1"
-        warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR")
-        if not warm_dir:
-            parent = os.path.dirname(SF_DIR.rstrip("/"))
-            sfs = sorted(
-                d for d in (os.listdir(parent) if os.path.isdir(parent) else [])
-                if d.startswith("sf") and os.path.isdir(os.path.join(parent, d))
-            )
-            smallest = min(
-                (d for d in sfs if _sf_value(d) is not None),
-                key=_sf_value,
-                default=None,
-            )
-            warm_dir = os.path.join(parent, smallest) if smallest else SF_DIR
-        warm_names = names if full else [
-            n for n in bootstrap if n in QUERIES
-        ]
-        print(
-            f"# warm-up dir: {warm_dir} "
-            f"({'full' if full else 'bootstrap'}, {len(warm_names)} queries)",
-            file=sys.stderr,
-        )
-        for name in warm_names:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+    warm_dir = _warm_dir(SF_DIR)
+    warm_names = [n for n in BOOTSTRAP if n in QUERIES]
+    print(
+        f"# warm-up dir: {warm_dir} (bootstrap, {len(warm_names)} queries)",
+        file=sys.stderr,
+    )
+    for name in warm_names:
+        _run(QUERIES[name], spark, warm_dir)
 
-    # Time construction AND execution: some pipelines (KMeans fit,
-    # upsert writes) do real work eagerly while the plan is built —
-    # timing only the final action would under-report them. Min of
-    # n_passes runs, INTERLEAVED as full passes over the query list:
-    # this box shows multi-minute noisy-neighbor stalls, and
-    # back-to-back runs of the same query let one stall swallow both
-    # samples (that inflated five BENCH_r02 entries ~10×). With full
-    # passes a stall lands on at most one sample per query, and
-    # min-of-passes recovers the reproducible engine cost.
-    # Noise telemetry: loadavg before every pass (+ once after the
-    # last) and a fixed-cost canary per pass. One unrecorded canary
-    # first primes its codegen so pass-1 isn't charged for it.
-    _canary(spark)
-    loadavgs: list[list[float] | None] = []
-    canary_sec: list[float] = []
     samples: dict[str, list[float]] = {n: [] for n in names}
-    # Stage attribution is snapshotted PER PASS so the detail file can
-    # carry the stage split of the pass that produced the min wall —
-    # reading plans.pipeline.LAST_STAGE_SECONDS once at the end takes
-    # whichever pass ran last (module attribute access, not a from-
-    # import: run_batch_pipeline REBINDS the global each run).
-    from skysafe_datalake_spark.plans import pipeline as _pipeline
-
-    e2e_stage_passes: list[dict] = []
-    for _pass in range(n_passes):
-        loadavgs.append(_loadavg())
-        canary_sec.append(_canary(spark))
+    for _pass in range(PASSES):
         for name in names:
             t0 = time.perf_counter()
-            df = QUERIES[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
+            _run(QUERIES[name], spark, SF_DIR)
             samples[name].append(round(time.perf_counter() - t0, 3))
-            if name == "batch_pipeline_e2e":
-                e2e_stage_passes.append(dict(_pipeline.LAST_STAGE_SECONDS))
-    loadavgs.append(_loadavg())
     timings = {n: min(s) for n, s in samples.items()}
-    noise = {"loadavg": loadavgs, "canary_sec": canary_sec}
-    if quiet_start is not None:
-        noise["quiet_start"] = quiet_start
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
-
-    headline_timings = {n: timings[n] for n in headline if n in timings}
+    headline_timings = {n: timings[n] for n in headline}
     total = round(sum(headline_timings.values()), 3)
+
+    line = {
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": headline_timings,
+        "sf": sf_val,
+        "timing": f"construction+action, min of {PASSES} interleaved passes",
+        "n_queries": len(headline_timings),
+    }
+    detail = {
+        **line,
+        "queries": timings,
+        "samples": samples,
+        "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
+        "all": run_all,
+    }
     rnd = _round_number(repo_root)
-
-    # Cross-round host-speed line: this run's canary min vs the last
-    # recorded round's, with a flag when the host is too differently
-    # loaded (either direction) for RAW per-query deltas to mean
-    # anything (the normalized ratios below stay meaningful either
-    # way). One walk over the prior-round files serves both the canary
-    # comparison and the per-query normalization.
-    prev_lookup = _prev_round_data(repo_root, rnd, run_all)
-    noise.update(_canary_comparison(canary_sec, repo_root, rnd, prev_lookup))
-    # This run's own quality flag, from the best evidence available:
-    # the wall-corroborated per-pass load factors when the sample
-    # matrix is wide enough (a canary instant can spike on a transient
-    # the pass's queries never felt — canary_spread 2.9 was observed
-    # on a run whose wall profiles were flat), the canary spread
-    # otherwise (set by _canary_comparison above).
-    pass_load = _pass_load_factors(samples)
-    if pass_load and min(pass_load) > 0:
-        noise["pass_load"] = [round(x, 3) for x in pass_load]
-        # Pass 1 carries per-query first-run codegen by design
-        # (L_1 ~= 1.7 on a quiet host) — the swing that matters is
-        # across the steady passes.
-        steady = pass_load[1:] if len(pass_load) >= 3 else pass_load
-        spread = max(steady) / min(steady)
-        noise["pass_load_spread"] = round(spread, 3)
-        noise["noisy_host"] = spread > _NOISY_HOST_RATIO
-    # A quiet-start gate that gave up means the timed passes started
-    # on a host still past the load bar — this run's own quality flag
-    # picks that up even if the measured spread stayed narrow.
-    if quiet_start is not None and quiet_start.get("gave_up"):
-        noise["noisy_host"] = True
-    prev = noise.get("prev_canary")
-    if prev:
-        flag = (
-            "HOST SPEED MISMATCH — raw deltas mislead; read only the "
-            "normalized ratios"
-            if noise.get("host_speed_mismatch")
-            else "host speed comparable"
-        )
-        print(
-            f"# canary min {noise['canary_min']:.3f}s vs "
-            f"r{prev['round']} {prev['min']:.3f}s "
-            f"(x{noise['canary_ratio_vs_prev']}): {flag}",
-            file=sys.stderr,
-        )
-    else:
-        print(
-            f"# canary min {noise['canary_min']}s; no prior round with "
-            "noise telemetry to compare against",
-            file=sys.stderr,
-        )
-
-    # Canary-normalized per-query deltas vs the previous recorded
-    # round, host speed divided out. PER-PASS when the prior round
-    # recorded per-pass samples (each wall ÷ its own pass's canary,
-    # min of the quotients — sound under intra-run load swings);
-    # run-min fallback otherwise, qualified by the canary spread. The
-    # full map goes to the detail file; flagged regressions (>1.25x
-    # normalized, ≥0.25 s) go to the stdout line and stderr so a real
-    # engine regression is visible without any manual division.
-    prev_data, prev_rnd, _prev_file = prev_lookup
-    if prev_data is not None and prev_data.get("sf") not in (None, sf_val):
-        # A cross-SF ratio is volume, not regression (a local sf0.001
-        # smoke must not "regress" against the driver's sf0.1 record).
-        print(
-            f"# prev round r{prev_rnd} ran sf={prev_data.get('sf')} vs "
-            f"this run's sf={sf_val}; skipping per-query normalization",
-            file=sys.stderr,
-        )
-        prev_data = None
-    # A shape-matched prior record without per-pass samples forces the
-    # run_min fallback even though a per-pass record of the other
-    # shape exists — _prev_round_data logged it; persist the downgrade
-    # in the artifact too so the weaker estimator is never invisible.
-    # (Recorded only when the comparison actually happens: after the
-    # cross-SF guard, a skipped normalization must not carry a
-    # method-downgrade marker for a method that never ran.)
-    _sel = ((prev_data or {}).get("_selection")) or None
-    if _sel:
-        noise["prev_record_selection"] = _sel
-    prev_queries = (prev_data or {}).get("queries") or {}
-    prev_samples = (prev_data or {}).get("samples") or {}
-    prev_canaries = ((prev_data or {}).get("noise") or {}).get(
-        "canary_sec"
-    ) or []
-    per_pass = bool(prev_samples) and bool(prev_canaries)
-    if per_pass:
-        normalized = _normalized_ratios_per_pass(
-            samples, canary_sec, prev_samples, prev_canaries
-        )
-        unstable = False
-    else:
-        normalized = _normalized_ratios(
-            timings, prev_queries, noise.get("canary_ratio_vs_prev")
-        )
-        # Run-min arithmetic only: a wide intra-run canary spread
-        # means the min-canary divisor and a query's min sample can
-        # come from differently-loaded passes — the flags below are
-        # then suspicion, not evidence.
-        unstable = (noise.get("canary_spread") or 1.0) > _NOISY_HOST_RATIO
-    flagged = _flag_regressions(normalized, timings, prev_queries)
-    # Above-bar flags within the fixed-overhead innocence envelope of
-    # the host-speed mismatch are SUSPECTS (unattributable: a query
-    # with enough non-CPU overhead reads there with zero engine
-    # change); only flags past the envelope are called regressions.
-    envelope = _innocence_envelope(noise.get("canary_ratio_vs_prev"))
-    regressions = {n: r for n, r in flagged.items() if r > envelope}
-    suspects = {n: r for n, r in flagged.items() if r <= envelope}
-    demotion_reason = None
-    prev_noise = (prev_data or {}).get("noise") or {}
-    # Retrospective adjudication of a uniform shift the PREVIOUS
-    # record demoted wholesale: this run IS the re-run that tells an
-    # engine-wide regression (the shifted level reproduces, median vs
-    # that record ~1) from host degradation (the inflation unwinds,
-    # median ~1/shift). Without this, a genuine engine-wide slowdown
-    # reproduces against a pre-regression anchor every round, gets
-    # demoted every time, and never reaches normalized_regressions.
-    cur_median = _median(normalized.values()) if normalized else None
-    adjudication = _adjudicate_prev_shift(
-        prev_noise, cur_median, cur_run_noisy=bool(noise.get("noisy_host"))
-    )
-    if adjudication is not None:
-        noise["prev_shift_adjudication"] = adjudication
-        if adjudication["verdict"] == "engine_wide_persisted":
-            # _uniform_shift flags both directions; a persisted
-            # speedup (shift < 1) is news, not an alarm — only a
-            # persisted slowdown earns the regression key and the
-            # bisect call-to-action.
-            u = adjudication["prev_shift"]
-            kind = "regression" if u > 1 else "speedup"
-            noise[f"engine_wide_{kind}"] = {
-                "ratio": u,
-                "demoted_in_round": prev_rnd,
-            }
-            print(
-                f"# ENGINE-WIDE {kind.upper()}: r{prev_rnd}'s demoted "
-                f"uniform shift x{u} "
-                "REPRODUCED (this run's median vs that record is "
-                f"{adjudication['cur_median_vs_prev']}) — engine "
-                "cost, not host weather, and it is now baked into "
-                "the anchor"
-                + ("; bisect the round that shifted" if u > 1 else ""),
-                file=sys.stderr,
-            )
-        else:
-            print(
-                f"# r{prev_rnd}'s demoted uniform shift "
-                f"x{adjudication['prev_shift']} adjudicated: "
-                f"{adjudication['verdict']} (this run's median vs "
-                f"that record {adjudication['cur_median_vs_prev']})",
-                file=sys.stderr,
-            )
-    # Anchor-quality inheritance (the r10 lesson: 4 flags were
-    # "confirmed" against a noisy_host:true r9 record with zero code
-    # change in any of them). The prev side of every normalized ratio
-    # comes from the anchor's samples, so when the anchor's OWN run
-    # was noisy, an above-bar flag is unattributable — confirmation
-    # re-times only the current side and cannot repair the anchor.
-    # Demote to suspects until a clean re-anchor exists.
-    anchor_noisy = bool(prev_noise.get("noisy_host"))
-    if prev_data is not None:
-        noise["anchor_noisy"] = anchor_noisy
-    if anchor_noisy and normalized:
-        # The unreliability cuts BOTH ways: an inflated anchor also
-        # flattens the ratio of a genuinely-regressed query, so a
-        # zero-flag result against a noisy anchor earns the
-        # withheld-verdict summary, not the confident all-clear.
-        demotion_reason = "noisy_anchor"
-        n_demoted = len(regressions)
-        suspects.update(regressions)
-        regressions = {}
-        print(
-            f"# prev anchor r{prev_rnd} recorded noisy_host: true — "
-            f"demoting {n_demoted} above-bar flags to "
-            "normalized_suspects (the anchor-side costs are the "
-            "unreliable half of the ratio, in both directions; "
-            "confirmation skipped — re-timing the current side "
-            "cannot repair the anchor)",
-            file=sys.stderr,
-        )
-    # Targeted confirmation: a flag from the main passes is a
-    # hypothesis (two same-code back-to-back sweeps produced disjoint
-    # flag sets — min-of-3 jitter), so re-time ONLY the flagged
-    # queries, minutes after their main-pass samples, and keep the
-    # flag only if the combined evidence still clears the bar. Cost
-    # is bounded: flagged queries are usually the sub-second tail,
-    # and the set is capped worst-first (a live sweep that checked
-    # only its 20 worst washed ALL 20 out and shipped 10 unchecked
-    # cap-overflow flags — the cap must comfortably exceed a noisy
-    # run's flag count, not just cover its worst slice).
-    # Uniform-shift guard: when the MEDIAN normalized ratio moved
-    # off 1.0 across the whole compared set, the host changed, not
-    # 100+ unrelated queries at once — per-query flags (and same-host
-    # confirmation) cannot attribute anything. Record the shift,
-    # demote every flag to suspect, and leave the per-query map for
-    # cross-round analysis once a clean record exists.
-    shift = _uniform_shift(normalized)
-    if shift is not None and anchor_noisy:
-        # A shift measured against a noisy anchor is most plausibly
-        # the ANCHOR's own inflation read backwards — the normalized
-        # ratios' prev side is the unreliable half. Recording it under
-        # the unqualified key would hand next round's
-        # _adjudicate_prev_shift a number it could "reproduce" into a
-        # false ENGINE-WIDE REGRESSION verdict, and bench_history
-        # would mark this record unclean for an anchor-side artifact.
-        # Park it under a qualified key (adjudication and history read
-        # only `uniform_shift`); the flags are already demoted with
-        # demotion_reason = "noisy_anchor".
-        noise["uniform_shift_vs_noisy_anchor"] = shift
-        print(
-            f"# median normalized ratio {shift} vs the NOISY r"
-            f"{prev_rnd} anchor — recorded as "
-            "uniform_shift_vs_noisy_anchor (not adjudicable: the "
-            "anchor side of the ratio is the unreliable half)",
-            file=sys.stderr,
-        )
-        shift = None
-    elif shift is not None:
-        noise["uniform_shift"] = shift
-        demotion_reason = "uniform_shift"
-        suspects.update(regressions)
-        regressions = {}
-        print(
-            f"# UNIFORM SHIFT: median normalized ratio {shift} across "
-            f"{len(normalized)} queries — a host-level change the "
-            "canary did not capture (contention the pure-CPU probe "
-            "can't see, or an engine-wide change that will reproduce "
-            "on a re-run); per-query flags demoted to suspects, "
-            "confirmation skipped (same-host re-measurement cannot "
-            "attribute a host-level shift)",
-            file=sys.stderr,
-        )
-    confirm_passes = int(os.environ.get("SPARK_GRAFT_CONFIRM_PASSES", "3"))
-    confirm_cap = int(os.environ.get("SPARK_GRAFT_CONFIRM_CAP", "40"))
-    if regressions and per_pass and confirm_passes > 0:
-        to_check = dict(
-            sorted(regressions.items(), key=lambda kv: -kv[1])[:confirm_cap]
-        )
-        # Flags beyond the cap are hypotheses NO confirmation pass
-        # ever examined — they go to the record's `unchecked` list,
-        # visibly separate from confirmation survivors (the pre-r11
-        # merge shipped 10 such flags inside normalized_regressions,
-        # indistinguishable from evidence).
-        unchecked = {
-            n: r for n, r in regressions.items() if n not in to_check
-        }
-        # Unflagged control queries ride along so the confirmation
-        # columns of the combined matrix carry enough independent
-        # walls for _pass_load_factors — without them a loaded
-        # confirmation window over a small flag set reads its own
-        # inflation as load ~1 and falsely confirms jitter flags.
-        # Everything above the bar is excluded from control duty:
-        # cap-overflow flags and envelope suspects are exactly the
-        # queries whose walls are in question. The same set is barred
-        # from the load medians themselves (load_exclude below) so a
-        # flag set larger than the control count cannot dominate the
-        # confirmation columns' load estimate.
-        above_bar = set(regressions) | set(suspects)
-        controls = _confirmation_controls(samples, above_bar)
-        print(
-            f"# confirming {len(to_check)} regression flags with "
-            f"{confirm_passes} targeted passes ({len(controls)} "
-            "unflagged controls anchor the per-pass load factors)...",
-            file=sys.stderr,
-        )
-        extra: dict[str, list[float]] = {
-            n: [] for n in list(to_check) + controls
-        }
-        extra_canaries: list[float] = []
-        for _ in range(confirm_passes):
-            extra_canaries.append(_canary(spark))
-            for name in extra:
-                t0 = time.perf_counter()
-                QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                extra[name].append(round(time.perf_counter() - t0, 3))
-        confirmed, washed = _confirm_flags(
-            to_check,
-            samples,
-            canary_sec,
-            extra,
-            extra_canaries,
-            prev_samples,
-            prev_canaries,
-            envelope,
-            load_exclude=above_bar,
-        )
-        noise["regression_confirm"] = {
-            "passes": confirm_passes,
-            "canary_sec": extra_canaries,
-            "checked": len(to_check),
-            "controls": controls,
-            "washed_out": washed,
-            "unchecked": unchecked,
-            "samples": extra,
-        }
-        if washed:
-            print(
-                f"# washed out {len(washed)}/{len(to_check)} flags on "
-                "confirmation (jitter, not engine cost): "
-                + ", ".join(f"{n} x{r}" for n, r in washed.items()),
-                file=sys.stderr,
-            )
-        if unchecked:
-            print(
-                f"# {len(unchecked)} cap-overflow flags stay UNCHECKED "
-                "hypotheses (recorded under "
-                "noise.regression_confirm.unchecked, NOT in "
-                "normalized_regressions): "
-                + ", ".join(f"{n} x{r}" for n, r in unchecked.items()),
-                file=sys.stderr,
-            )
-        regressions = confirmed
-    noise["normalized_regressions"] = regressions
-    noise["normalized_suspects"] = suspects
-    noise["innocence_envelope"] = round(envelope, 3)
-    noise["normalized_method"] = (
-        ("per_pass" if per_pass else "run_min") if normalized else None
-    )
-    # Reliability keys off EVERY demotion path, not just this run's
-    # own instability and shift: a verdict withheld for a noisy
-    # anchor is a withheld comparison, and a reader keying off this
-    # flag must not take it as a trustworthy all-clear.
-    noise["normalized_reliable"] = (
-        not unstable and shift is None and demotion_reason is None
-    )
-    if normalized:
-        if regressions:
-            worst = ", ".join(
-                f"{n} x{r} ({timings[n]:.2f}s)" for n, r in regressions.items()
-            )
-            qualifier = (
-                " [UNRELIABLE: intra-run canary spread "
-                f"x{noise['canary_spread']} — load swung mid-run; "
-                "re-run on a quieter host before believing these]"
-                if unstable
-                else ""
-            )
-            print(
-                f"# normalized regressions vs r{prev_rnd} (> "
-                f"{_NORMALIZED_REGRESSION_RATIO}x after canary "
-                f"correction AND past the x{noise['innocence_envelope']} "
-                f"fixed-overhead envelope, >= {_REGRESSION_MIN_SEC}s)"
-                f"{qualifier}: {worst}",
-                file=sys.stderr,
-            )
-        elif demotion_reason is not None:
-            # Don't print the all-clear when flags were demoted
-            # wholesale — the empty regression list is a confidence
-            # statement about the comparison, not about the engine.
-            detail = (
-                f"uniform shift x{noise.get('uniform_shift')} across the "
-                "compared set (host-level confound; an engine-wide "
-                "change would reproduce and be adjudicated next round)"
-                if demotion_reason == "uniform_shift"
-                else f"prev anchor r{prev_rnd} was noisy_host: true"
-            )
-            print(
-                f"# regression verdict withheld vs r{prev_rnd}: "
-                f"{detail} — above-bar flags sit in "
-                "normalized_suspects until a clean re-anchor",
-                file=sys.stderr,
-            )
-        else:
-            print(
-                f"# no normalized per-query regressions vs r{prev_rnd} "
-                f"({noise['normalized_method']} canary normalization, "
-                f"none past max({_NORMALIZED_REGRESSION_RATIO}, "
-                f"envelope {noise['innocence_envelope']})x at >= "
-                f"{_REGRESSION_MIN_SEC}s)",
-                file=sys.stderr,
-            )
-        if suspects:
-            listed = ", ".join(
-                f"{n} x{r}" for n, r in suspects.items()
-            )
-            print(
-                f"# unattributable above-bar flags vs r{prev_rnd} "
-                f"(within the x{noise['innocence_envelope']} "
-                "fixed-overhead envelope of the host-speed mismatch — "
-                "a non-CPU-bound query reads here with zero engine "
-                "change; re-anchor on a comparable-speed host to "
-                f"attribute): {listed}",
-                file=sys.stderr,
-            )
-
-    # Stage-level attribution for the composite e2e row (the only
-    # double-digit full-registry bench number), from the pass that
-    # produced the recorded MIN wall — the last pass's stages (the
-    # pre-r11 behavior) let a loaded final pass ship a 21.6 s
-    # `combine` attribution against the same record's 15.9 s min.
-    e2e_stage_sec = None
-    if "batch_pipeline_e2e" in names:
-        e2e_stage_sec = _min_pass_stage_sec(
-            e2e_stage_passes, samples.get("batch_pipeline_e2e") or []
-        )
-
     detail_path = os.path.join(repo_root, f"BENCH_DETAIL_r{rnd:02d}.json")
     try:
         with open(detail_path, "w") as f:
-            payload = {
-                    "metric": "headline_queries_total_wall",
-                    "value": total,
-                    "unit": "sec",
-                    "sf": sf_val,
-                    "cpus": int(CPUS) if CPUS.isdigit() else CPUS,
-                    "timing": (
-                        f"construction+action, min of {n_passes} "
-                        "interleaved passes"
-                    ),
-                    "n_queries": len(headline_timings),
-                    "queries": timings,
-                    "samples": samples,
-                    "noise": noise,
-                    # Canary-normalized cur/prev per query — 1.0 means
-                    # unchanged engine cost whatever the host load did
-                    # (method "per_pass": each wall ÷ its own pass's
-                    # canary, min of quotients, both rounds; "run_min":
-                    # the r6-r9 min-based fallback).
-                    "normalized_ratio_vs_prev": {
-                        "vs_round": prev_rnd,
-                        "method": noise.get("normalized_method"),
-                        "queries": normalized,
-                    } if normalized else None,
-                    "e2e_stage_sec": e2e_stage_sec,
-                    "all": run_all,
-                }
-            json.dump(payload, f, indent=1, sort_keys=True)
+            json.dump(detail, f, indent=1, sort_keys=True)
         print(f"# full detail: {detail_path}", file=sys.stderr)
-        if run_all:
-            # Durable copy: the driver's round-end headline run
-            # overwrites BENCH_DETAIL_r{N}.json (that is how the r9
-            # full-registry record was lost from the tree tip), so
-            # --all sweeps also land under a name nothing clobbers.
-            full_path = os.path.join(
-                repo_root, f"BENCH_FULL_r{rnd:02d}.json"
-            )
-            with open(full_path, "w") as f:
-                json.dump(payload, f, indent=1, sort_keys=True)
-            print(f"# full-registry copy: {full_path}", file=sys.stderr)
     except OSError as exc:  # read-only checkout: stdout line still works
         print(f"# could not write {detail_path}: {exc}", file=sys.stderr)
-
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": headline_timings,
-                "sf": sf_val,
-                # r01 timed only the final action; r02+ also counts
-                # plan-construction work (KMeans fits, upsert writes
-                # run eagerly) and takes min-of-2 interleaved passes;
-                # r04 trims the headline 127 -> ~62 family
-                # representatives — totals are not comparable across
-                # those boundaries.
-                "timing": (
-                    f"construction+action, min of {n_passes} "
-                    "interleaved passes"
-                ),
-                "n_queries": len(headline_timings),
-                # loadavg sampled before each pass + after the last;
-                # canary = fixed-cost pure-CPU probe per pass (see
-                # module docstring): compare canary across rounds
-                # before reading per-query deltas as regressions.
-                # Confirmation per-query samples stay in the detail
-                # file: up to 40 flagged queries x passes would grow
-                # this line ~1.5 kB toward the driver's tail-capture
-                # limit (the round-3 failure mode).
-                "noise": (
-                    {
-                        **noise,
-                        "regression_confirm": {
-                            k: v
-                            for k, v in noise["regression_confirm"].items()
-                            if k != "samples"
-                        },
-                    }
-                    if isinstance(noise.get("regression_confirm"), dict)
-                    else noise
-                ),
-                "detail_file": os.path.basename(detail_path),
-            },
-            separators=(",", ":"),
-        )
-    )
+    line["detail_file"] = os.path.basename(detail_path)
+    print(json.dumps(line, separators=(",", ":")))
     spark.stop()
 
 

@@ -11,7 +11,8 @@ enriched / usage (Parquet).
 
 Two write paths. ``write`` runs a Spark write with dynamic partition
 overwrite (only touched partitions rewritten — the reference's
-``mode("overwrite")`` nukes the whole entity dir). ``write_file``
+``mode("overwrite")`` nukes the whole entity dir); a 0-row batch still
+replaces its partition, with one empty file. ``write_file``
 puts one fetch's bytes into the partition through the Hadoop
 FileSystem client, no Spark job: the raw layer, like the reference's
 boto3 ``save_json``. Latest-partition discovery is a directory
@@ -25,7 +26,7 @@ from __future__ import annotations
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -100,13 +101,22 @@ class LakeCatalog:
         """Write one batch into its date/hour partition (dynamic
         overwrite: re-running a minute replaces only that partition —
         idempotent retries, matching the reference's per-partition
-        overwrite semantics without its full-table clobber)."""
+        overwrite semantics without its full-table clobber).
+
+        Dynamic overwrite touches only the partitions that receive
+        rows, so a 0-row batch would leave the partition's old files
+        (or no partition at all) and ``read_latest`` would re-serve an
+        older batch. The rows are counted by an ``Observation`` on the
+        write itself (no extra job); at 0 rows one more write replaces
+        the partition with a single 0-row file of the batch's schema."""
         date, hour = self.partition_values(ts)
         target = self.path(layer, source, entity)
         schema = _data_schema(df.schema)
         self._written.pop(target, None)
+        rows = Observation()
         (
-            df.withColumn("date", F.lit(date))
+            df.observe(rows, F.count(F.lit(1)).alias("n"))
+            .withColumn("date", F.lit(date))
             .withColumn("hour", F.lit(hour))
             .write.format(fmt)
             .options(**(options or {}))
@@ -115,6 +125,14 @@ class LakeCatalog:
             .partitionBy("date", "hour")
             .save(target)
         )
+        if rows.get["n"] == 0:
+            (
+                df.sparkSession.createDataFrame([], schema)
+                .write.format(fmt)
+                .options(**(options or {}))
+                .mode("overwrite")
+                .save(f"{target}/date={date}/hour={hour}")
+            )
         self._written[target] = (date, hour, schema)
         return target
 

@@ -56,7 +56,7 @@ class BatchRunResult:
     # Wall seconds per DAG stage (extract_flights, extract_weather,
     # format_flights, format_weather, combine, usage [, counts]).
     # The e2e pipeline is a composite — the only way to attribute a
-    # regression inside its single bench number is stage-level wall.
+    # regression inside its single wall time is stage-level wall.
     stage_seconds: dict[str, float] = field(default_factory=dict)
 
 
@@ -134,9 +134,8 @@ def run_batch_pipeline(
     the flights leg's. Stage timers run inside their thread, so each
     stage still records its own true wall — but the two legs'
     stage_seconds can now OVERLAP, and their sum may exceed the
-    pipeline wall (bench's `inter_stage_overhead` residual guards
-    against going negative; the e2e test pins the serial spine
-    invariant instead: max(leg) + combine + usage <= total)."""
+    pipeline wall (the e2e test pins the serial spine invariant
+    instead: max(leg) + combine + usage <= total)."""
     stage_seconds: dict[str, float] = {}
 
     def _staged(name: str, fn):
@@ -189,8 +188,8 @@ def run_batch_pipeline(
         }.items():
             counts[name] = catalog.read_latest(spark, layer, source, entity).count()
         stage_seconds["counts"] = round(time.perf_counter() - t0, 3)
-    # Module-level copy of the LAST run's stage wall: bench.py reads
-    # it to attach stage-level attribution to the e2e bench row
+    # Module-level copy of the LAST run's stage wall: scale_smoke.py
+    # reads it to attach stage-level attribution to the e2e row
     # without threading the result object through the registry's
     # (spark, sf_dir) -> DataFrame query signature.
     global LAST_STAGE_SECONDS
@@ -209,5 +208,5 @@ def run_batch_pipeline(
 
 
 # Stage wall seconds of the most recent run_batch_pipeline call in
-# this process (telemetry for bench detail; see run_batch_pipeline).
+# this process (telemetry for scale_smoke; see run_batch_pipeline).
 LAST_STAGE_SECONDS: dict[str, float] = {}

@@ -1,5 +1,6 @@
-"""bench.py / scale_smoke.py harness behavior (mostly Spark-free;
-the scale_smoke refusal tests drive timed() on the session fixture)."""
+"""bench.py / scale_smoke.py harness behavior: the round-number file
+protocol, the CLI's one-line contract, and scale_smoke's refusal path
+(the last two on the session fixture)."""
 
 from __future__ import annotations
 
@@ -54,825 +55,38 @@ def test_round_number_warns_on_unparseable_env(tmp_path, monkeypatch, capsys):
     assert "SPARK_GRAFT_ROUND='r5'" in capsys.readouterr().err
 
 
-def test_loadavg_shape():
-    # On Linux this reads /proc/loadavg; elsewhere it returns None.
-    la = bench._loadavg()
-    if la is not None:
-        assert len(la) == 3 and all(isinstance(x, float) for x in la)
-
-
-def test_stateful_shuffle_partitions_sizing():
-    from skysafe_datalake_spark.streaming.driver import (
-        stateful_shuffle_partitions,
-    )
-
-    # replay volume: floor wins
-    assert stateful_shuffle_partitions(10_000) == 8
-    assert stateful_shuffle_partitions(10_000, lo=4) == 4
-    # 64x smoke volume: 6.4M rows / 200k = 32 stores
-    assert stateful_shuffle_partitions(6_400_000) == 32
-    # unbounded input: hi caps store instances
-    assert stateful_shuffle_partitions(10**9) == 128
-    assert stateful_shuffle_partitions(0) == 8
-
-
-def test_stateful_sizing_pinned_at_bench_scale():
-    """Pin the five stateful queries' BENCH-SCALE partition counts.
-
-    Round 5 introduced data-sized state-store parallelism and its one
-    coinciding bench regression (streaming_stateful_running_agg +30%)
-    could not be ruled a partition-count change or noise. This test
-    recomputes each site's Observation row count from the same sf0.1
-    events table the bench replays and asserts the helper still lands
-    on the measured replay floors (8/8/4/4/4) — so any future bench
-    delta on these queries is provably not a sizing change.
-    """
-    import duckdb
-
-    from skysafe_datalake_spark.streaming.driver import (
-        stateful_shuffle_partitions,
-    )
-
-    events = "/root/testdata/sf0.1/events.parquet"
-    if not os.path.exists(events):
-        pytest.skip("sf0.1 testdata not present")
-    con = duckdb.connect()
-    total, clicks, purchases, dup_extra = con.execute(
-        f"""SELECT count(*),
-                   count(*) FILTER (event_type = 'click'),
-                   count(*) FILTER (event_type = 'purchase'),
-                   count(*) FILTER (event_id % 3 = 0)
-            FROM '{events}'"""
-    ).fetchone()
-    con.close()
-    # workload/pipeline.py stateful sites, same Observation inputs:
-    #   streaming_stateful_running_agg: all events, default lo=8
-    assert stateful_shuffle_partitions(total) == 8
-    #   streaming_interval_join: clicks + purchases, default lo=8
-    assert stateful_shuffle_partitions(clicks + purchases) == 8
-    #   streaming_left/full_outer_join: clicks + purchases + 2
-    #   sentinel rows, lo=4 (4 state stores per partition)
-    assert stateful_shuffle_partitions(clicks + purchases + 2, lo=4) == 4
-    assert stateful_shuffle_partitions(clicks + purchases + 2, lo=4) == 4
-    #   streaming_dedup_watermark: events + every-3rd re-sent, lo=4
-    assert stateful_shuffle_partitions(total + dup_extra, lo=4) == 4
-    #   streaming_static_join (sized in round 9): all events, lo=4 —
-    #   complete-mode hour x category cells, state is a handful of rows
-    assert stateful_shuffle_partitions(total, lo=4) == 4
-
-
-# ───────────────── cross-round canary comparison ─────────────────
-
-
-def _write_json(path, obj):
+def test_main_prints_the_one_line_contract(spark, tmp_path, monkeypatch, capsys):
+    """bench.main() over stub queries: the last stdout line is one JSON
+    object with exactly the CLI's 8 keys, the full headline map, a
+    value that is the sum of that map, and under 2,000 chars (longer
+    lines were cut by a tail-captured stdout and did not parse). The
+    detail file lands beside a relocated bench.py, not in the
+    checkout."""
     import json
+    import sys
 
-    path.write_text(json.dumps(obj))
+    from skysafe_datalake_spark import session, workload
 
+    stubs = {name: lambda s, sf_dir: s.range(1) for name in bench.HEADLINE}
+    monkeypatch.setattr(workload, "QUERIES", stubs)
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path / "sf0.001"))
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
 
-def test_prev_round_data_prefers_full_registry_record(tmp_path):
-    # A --all sweep's durable BENCH_FULL copy (widest per-query map)
-    # outranks the BENCH_DETAIL the driver's round-end headline run
-    # overwrites — that overwrite is how the r9 full-registry record
-    # vanished from the tree tip.
-    _write_json(
-        tmp_path / "BENCH_FULL_r06.json",
-        {"noise": {"canary_sec": [0.061]}, "all": True},
-    )
-    _write_json(
-        tmp_path / "BENCH_DETAIL_r06.json",
-        {"noise": {"canary_sec": [0.09]}, "all": False},
-    )
-    data, rnd, fname = bench._prev_round_data(str(tmp_path), 7)
-    assert (rnd, fname) == (6, "BENCH_FULL_r06.json")
-    assert data["all"] is True
-
-
-def test_prev_round_data_prefers_same_run_shape(tmp_path):
-    # A query timed inside a 183-query pass carries ~12% more
-    # JVM/cache pollution than inside a 62-query headline pass
-    # (measured: r9 headline-62 total 74.5s within the full sweep vs
-    # 67.2s headline-only; the first full-vs-headline normalization
-    # flagged 15 zero-code-change queries at median 1.119 on a
-    # comparable-speed host). Cross-shape ratios read sweep shape,
-    # not engine cost — so a --all run compares against the prior
-    # FULL record and a headline run against the prior headline one.
-    _write_json(
-        tmp_path / "BENCH_FULL_r09.json",
-        {"noise": {"canary_sec": [0.109]}, "all": True},
-    )
-    _write_json(
-        tmp_path / "BENCH_DETAIL_r09.json",
-        {"noise": {"canary_sec": [0.099]}, "all": False},
-    )
-    _, _, full_pick = bench._prev_round_data(str(tmp_path), 10, run_all=True)
-    _, _, head_pick = bench._prev_round_data(str(tmp_path), 10, run_all=False)
-    assert full_pick == "BENCH_FULL_r09.json"
-    assert head_pick == "BENCH_DETAIL_r09.json"
-    # No same-shape record for the round: fall back to what exists
-    # (qualified by canary arithmetic) instead of skipping the round.
-    (tmp_path / "BENCH_FULL_r09.json").unlink()
-    _, _, fb_pick = bench._prev_round_data(str(tmp_path), 10, run_all=True)
-    assert fb_pick == "BENCH_DETAIL_r09.json"
-
-
-def test_prev_canary_min_walks_back_and_prefers_detail(tmp_path):
-    # r5 predates noise telemetry (no noise object); r6 has both a
-    # detail file and the driver's stdout capture — the detail file
-    # (full per-pass record) wins.
-    _write_json(tmp_path / "BENCH_r05.json", {"value": 80.58})
-    _write_json(
-        tmp_path / "BENCH_DETAIL_r06.json",
-        {"noise": {"canary_sec": [0.08, 0.059, 0.07]}},
-    )
-    _write_json(
-        tmp_path / "BENCH_r06.json", {"noise": {"canary_sec": [0.149, 0.2]}}
-    )
-    assert bench._prev_canary_min(str(tmp_path), 7) == (
-        0.059,
-        6,
-        "BENCH_DETAIL_r06.json",
-    )
-    # From round 8 the walk-back skips a telemetry-less r7 and still
-    # finds r6.
-    _write_json(tmp_path / "BENCH_r07.json", {"value": 1.0})
-    assert bench._prev_canary_min(str(tmp_path), 8)[1] == 6
-
-
-def test_prev_canary_min_none_without_telemetry(tmp_path):
-    _write_json(tmp_path / "BENCH_r05.json", {"value": 80.58})
-    assert bench._prev_canary_min(str(tmp_path), 6) == (None, None, None)
-
-
-def test_canary_comparison_flags_host_speed_mismatch(tmp_path):
-    _write_json(
-        tmp_path / "BENCH_DETAIL_r06.json", {"noise": {"canary_sec": [0.06]}}
-    )
-    out = bench._canary_comparison([0.151, 0.149], str(tmp_path), 7)
-    assert out["canary_min"] == 0.149
-    assert out["prev_canary"] == {
-        "round": 6,
-        "file": "BENCH_DETAIL_r06.json",
-        "min": 0.06,
+    bench.main()
+    last = capsys.readouterr().out.strip().splitlines()[-1]
+    line = json.loads(last)
+    assert set(line) == {
+        "metric", "value", "unit", "queries", "sf", "timing", "n_queries", "detail_file",
     }
-    assert out["canary_ratio_vs_prev"] == pytest.approx(2.483)
-    assert out["host_speed_mismatch"] is True
-    # ...but the run ITSELF was steady (spread 1.013): a loaded-vs-
-    # last-round host is a comparability problem, not a noisy run.
-    assert out["noisy_host"] is False
-
-
-def test_canary_comparison_comparable_host(tmp_path):
-    _write_json(
-        tmp_path / "BENCH_DETAIL_r06.json", {"noise": {"canary_sec": [0.06]}}
-    )
-    out = bench._canary_comparison([0.065], str(tmp_path), 7)
-    assert out["canary_ratio_vs_prev"] == pytest.approx(1.083)
-    assert out["host_speed_mismatch"] is False
-    assert out["noisy_host"] is False
-
-
-def test_canary_comparison_without_prior_round(tmp_path):
-    out = bench._canary_comparison([0.1], str(tmp_path), 1)
-    assert out == {
-        "canary_min": 0.1,
-        "canary_spread": 1.0,
-        "noisy_host": False,
-        "prev_canary": None,
-    }
-
-
-def test_canary_spread_marks_intra_run_load_swing(tmp_path):
-    # Observed live: canaries [0.12, 0.06, 0.113] while loadavg rose
-    # 2.3 -> 5.0 — the min divisor and a query's min sample came from
-    # differently-loaded passes and 17 spurious regressions were
-    # flagged. The spread records that instability in the artifact,
-    # and (round 10) IS the noisy_host signal: this run's own samples
-    # disagree about the host they measured.
-    out = bench._canary_comparison([0.12, 0.06, 0.113], str(tmp_path), 1)
-    assert out["canary_spread"] == 2.0  # 0.12 / 0.06
-    assert out["canary_min"] == 0.06
-    assert out["noisy_host"] is True
-
-
-def test_canary_comparison_flags_quieter_host_too(tmp_path):
-    # The r8 failure direction: a 0.694x QUIETER host flatters every
-    # raw delta by ~30% — just as misleading as a loaded one. The flag
-    # is two-sided. It is NOT noisy_host (round 10): a quiet run after
-    # a loaded round — r10's exact situation, r9's committed canary
-    # min 0.099 came from a 1.5x-loaded host — would otherwise be
-    # branded noisy for last round's sins, with no way to EVER record
-    # the clean anchor the cross-round story needs.
-    _write_json(
-        tmp_path / "BENCH_DETAIL_r06.json", {"noise": {"canary_sec": [0.098]}}
-    )
-    out = bench._canary_comparison([0.068], str(tmp_path), 7)
-    assert out["canary_ratio_vs_prev"] == pytest.approx(0.694)
-    assert out["host_speed_mismatch"] is True
-    assert out["noisy_host"] is False
-
-
-def test_noisy_host_threshold_matches_regression_bar():
-    # r7 (1.4x load) sat under the old 1.5x bar and still distorted
-    # every raw ratio; the flag now trips at the same 1.25x bar the
-    # normalized regression list uses.
-    assert bench._NOISY_HOST_RATIO == 1.25
-    assert bench._NORMALIZED_REGRESSION_RATIO == 1.25
-
-
-# ─────────────── canary-normalized per-query deltas ───────────────
-
-
-def test_normalized_ratios_divide_out_host_speed():
-    """The r7/r8 failure in one test: a query that took 2.0s on last
-    round's host and 1.4s now, on a host whose canary ran 0.7x, has
-    NOT regressed or improved — (1.4/2.0)/0.7 == 1.0. The same raw
-    numbers on an even-speed host (canary 1.0) are a real 0.7x win."""
-    cur = {"q": 1.4}
-    prev = {"q": 2.0}
-    assert bench._normalized_ratios(cur, prev, 0.7) == {"q": 1.0}
-    assert bench._normalized_ratios(cur, prev, 1.0) == {"q": 0.7}
-    # a real regression survives normalization: 2x slower on a 0.694x
-    # quieter host (the r8 flattery factor) reads 2.882x, not 2x
-    assert bench._normalized_ratios({"q": 4.0}, prev, 0.694) == {"q": 2.882}
-
-
-def test_normalized_ratios_edge_cases():
-    # no prev round / no canary ratio -> empty (nothing to normalize)
-    assert bench._normalized_ratios({"q": 1.0}, {}, 0.7) == {}
-    assert bench._normalized_ratios({"q": 1.0}, {"q": 1.0}, None) == {}
-    assert bench._normalized_ratios({"q": 1.0}, {"q": 1.0}, 0) == {}
-    # queries only in one round are skipped; junk values are skipped
-    out = bench._normalized_ratios(
-        {"a": 1.0, "b": 1.0, "c": 1.0},
-        {"a": 2.0, "c": None, "d": 5.0},
-        1.0,
-    )
-    assert out == {"a": 0.5}
-    # zero prev time can't ratio
-    assert bench._normalized_ratios({"q": 1.0}, {"q": 0.0}, 1.0) == {}
-
-
-def test_per_pass_normalization_survives_intra_run_load_swing():
-    """The r9 hole, closed (VERDICT r9 #1): previous round quiet
-    throughout (canaries 0.06, query 1.0 s). Current round swings —
-    pass 1 loaded 3x (canary 0.18, query 3.0), pass 2 loaded 2x
-    (canary 0.12, query 2.0), pass 3 quiet for the canary (0.06) but
-    the query ate a per-query stall (2.5). The engine never changed.
-
-    Run-min arithmetic: canary ratio 0.06/0.06 = 1.0, min wall 2.0 →
-    a phantom 2.0x "regression" (exactly the 17 spurious flags r9
-    observed live). Per-pass: each wall ÷ its own pass's canary →
-    min(16.67, 16.67, 41.7) vs prev 16.67 → 1.0, nothing flagged."""
-    prev_samples = {"q": [1.0, 1.0, 1.0]}
-    prev_canaries = [0.06, 0.06, 0.06]
-    cur_samples = {"q": [3.0, 2.0, 2.5]}
-    cur_canaries = [0.18, 0.12, 0.06]
-
-    # the old run-min arithmetic flags the phantom regression
-    old = bench._normalized_ratios({"q": 2.0}, {"q": 1.0}, 0.06 / 0.06)
-    assert old == {"q": 2.0}
-    assert bench._flag_regressions(old, {"q": 2.0}, {"q": 1.0}) == {"q": 2.0}
-
-    # per-pass normalization reads the unchanged engine cost
-    new = bench._normalized_ratios_per_pass(
-        cur_samples, cur_canaries, prev_samples, prev_canaries
-    )
-    assert new == {"q": 1.0}
-    assert bench._flag_regressions(new, {"q": 2.0}, {"q": 1.0}) == {}
-
-
-def test_per_pass_normalization_keeps_real_regressions():
-    # A true 2x engine regression under an identical swing-load
-    # pattern still reads 2.0 — normalization must not launder it.
-    ratios = bench._normalized_ratios_per_pass(
-        {"q": [2.0, 4.0]}, [0.06, 0.12], {"q": [1.0, 2.0]}, [0.06, 0.12]
-    )
-    assert ratios == {"q": 2.0}
-
-
-def test_per_pass_costs_edge_cases():
-    # zero/junk canaries and junk walls are skipped; a query with no
-    # usable (wall, canary) pair produces no cost at all
-    costs = bench._per_pass_costs(
-        {"q": [1.0], "r": ["x", None]}, [0.1, 0.0, "y"]
-    )
-    assert costs == {"q": 10.0}
-    assert bench._per_pass_costs({}, [0.1]) == {}
-    assert bench._per_pass_costs({"q": [1.0]}, []) == {}
-    # per-pass ratio skips queries absent from either side
-    assert bench._normalized_ratios_per_pass(
-        {"q": [1.0]}, [0.1], {"other": [1.0]}, [0.1]
-    ) == {}
-
-
-def test_wall_corroborated_load_ignores_canary_spike():
-    """Observed live (r10): canaries [0.112, 0.105, 0.306] while every
-    query's wall profile stayed flat — the 0.306 was a transient at
-    the canary instant, not pass load, and raw per-pass quotients
-    read every pass-3 cost ~3x low (sweep normalized median 0.376 on
-    unchanged code). With a wide sample matrix the load factor comes
-    from the walls (all ~1.0 here) and the host speed is the MEDIAN
-    canary-per-load — the spike lands in the tail and the costs are
-    plain walls over the median canary."""
-    samples = {f"q{i}": [1.0 + i, 1.01 + i, 1.0 + i] for i in range(10)}
-    canaries = [0.112, 0.105, 0.306]
-    load = bench._pass_load_factors(samples)
-    assert load is not None
-    assert all(abs(x - 1.0) < 0.02 for x in load)
-    costs = bench._per_pass_costs(samples, canaries)
-    # host = median(0.112, 0.105, 0.306) = 0.112; q0 cost = 1.0/0.112
-    assert costs["q0"] == pytest.approx(1.0 / 0.112, rel=1e-6)
-    # Same run re-recorded with a clean canary normalizes to ~1.0
-    clean = bench._normalized_ratios_per_pass(
-        samples, [0.112, 0.105, 0.112], samples, canaries
-    )
-    assert all(abs(r - 1.0) < 0.01 for r in clean.values())
-
-
-def test_wall_corroborated_load_normalizes_whole_pass_swing():
-    # Pass 1 genuinely loaded 2x: every wall doubles, the canary
-    # doubles too. The wall-derived load factor is 2.0 for that pass,
-    # costs come out identical to an all-quiet run of the same engine.
-    quiet = {f"q{i}": [1.0 + i, 1.0 + i, 1.0 + i] for i in range(10)}
-    loaded = {f"q{i}": [2.0 * (1.0 + i), 1.0 + i, 1.0 + i] for i in range(10)}
-    load = bench._pass_load_factors(loaded)
-    assert load == [2.0, 1.0, 1.0]
-    ratios = bench._normalized_ratios_per_pass(
-        loaded, [0.2, 0.1, 0.1], quiet, [0.1, 0.1, 0.1]
-    )
-    assert all(abs(r - 1.0) < 0.01 for r in ratios.values())
-    # ...and a true 2x regression under the same swing still reads 2.0
-    regressed = {
-        f"q{i}": [4.0 * (1.0 + i), 2.0 * (1.0 + i), 2.0 * (1.0 + i)]
-        for i in range(10)
-    }
-    ratios = bench._normalized_ratios_per_pass(
-        regressed, [0.2, 0.1, 0.1], quiet, [0.1, 0.1, 0.1]
-    )
-    assert all(abs(r - 2.0) < 0.01 for r in ratios.values())
-
-
-def test_codegen_pass_is_not_load():
-    """Pass 1 deliberately carries each query's first-run codegen
-    (bootstrap warm-up primes shared machinery only) — live records
-    read L_1 ~= 1.7 on QUIET hosts. That inflation is per-query
-    heterogeneous, so the cost min runs over the steady passes and
-    the run-quality spread ignores L_1: a default run must not brand
-    itself noisy for its own warm-up design."""
-    samples = {
-        f"q{i}": [1.7 * (1.0 + i), 1.0 + i, 1.0 + i] for i in range(10)
-    }
-    load = bench._pass_load_factors(samples)
-    assert load == pytest.approx([1.7, 1.0, 1.0])
-    # steady spread = 1.0 — despite the 1.7 first-pass factor
-    steady = load[1:]
-    assert max(steady) / min(steady) == pytest.approx(1.0)
-    costs = bench._per_pass_costs(samples, [0.1, 0.1, 0.1])
-    # host = median(0.1/1.7, 0.1, 0.1) = 0.1; cost(q0) = 1.0/0.1
-    assert costs["q0"] == pytest.approx(10.0)
-    # a query whose codegen was NEGLIGIBLE (pass-1 wall == steady
-    # wall) must not have its pass-1 wall discounted by the matrix's
-    # codegen factor into a phantom 1.7x-cheap cost
-    samples["flat"] = [2.0, 2.0, 2.0]
-    costs = bench._per_pass_costs(samples, [0.1, 0.1, 0.1])
-    assert costs["flat"] == pytest.approx(20.0)
-
-
-def test_pass_load_factors_need_a_wide_matrix():
-    # A single query's pass-to-pass ratios are its OWN noise, not the
-    # host's — thin matrices fall back to raw canary quotients (the
-    # r9-era arithmetic the swing-load fixtures below pin).
-    assert bench._pass_load_factors({"q": [1.0, 2.0, 1.0]}) is None
-    costs = bench._per_pass_costs({"q": [1.0, 2.0]}, [0.1, 0.2])
-    assert costs == {"q": 10.0}
-
-
-def test_uniform_shift_detects_host_level_change():
-    """Observed live: external contention arriving mid-sweep (loadavg
-    0.4 -> 6.7) inflated every wall ~25-35% while the pure-CPU canary
-    read FAST — 110 spurious per-query 'regressions' at median 1.35.
-    183 unrelated queries do not all regress together: a shifted
-    median IS a host-level confound, and per-query flags are then
-    unattributable."""
-    shifted = {f"q{i}": 1.35 + (i % 5) * 0.02 for i in range(30)}
-    assert bench._uniform_shift(shifted) is not None
-    # A healthy distribution (bulk at 1.0, a few real regressions)
-    # must NOT trip the guard — that's the attribution-friendly shape.
-    healthy = {f"q{i}": 1.0 for i in range(25)}
-    healthy.update({f"r{i}": 2.0 for i in range(5)})
-    assert bench._uniform_shift(healthy) is None
-    # Too few queries: a median of a handful is not evidence of a
-    # host-level shift (headline subsets can be legitimately skewed).
-    assert bench._uniform_shift({f"q{i}": 1.4 for i in range(5)}) is None
-    # A uniformly FASTER host (flattering direction) is just as
-    # unattributable per-query.
-    faster = {f"q{i}": 0.7 for i in range(30)}
-    assert bench._uniform_shift(faster) == 0.7
-
-
-def test_confirm_flags_washes_out_jitter_keeps_real_regressions():
-    """Two same-code same-data back-to-back full sweeps produced
-    DISJOINT >1.25x flag sets (r10: 27 vs 17 flags) — a main-pass
-    flag is a hypothesis. Query "jit" flagged only because all three
-    main passes were unlucky (stall / loaded pass); its confirmation
-    samples land back at the prior round's cost, so the flag washes
-    out. Query "reg" reproduces 2x in the confirmation passes — a
-    real regression survives. Canaries steady at 0.1 throughout so
-    the arithmetic is bare."""
-    prev_samples = {"jit": [1.0, 1.0, 1.0], "reg": [1.0, 1.0, 1.0]}
-    prev_canaries = [0.1, 0.1, 0.1]
-    samples = {"jit": [2.0, 1.9, 2.1], "reg": [2.0, 2.0, 2.0]}
-    canaries = [0.1, 0.1, 0.1]
-    flagged = {"jit": 1.9, "reg": 2.0}
-    confirmed, washed = bench._confirm_flags(
-        flagged,
-        samples,
-        canaries,
-        {"jit": [1.0, 1.05, 1.0], "reg": [2.0, 2.1, 2.0]},
-        [0.1, 0.1, 0.1],
-        prev_samples,
-        prev_canaries,
-        envelope=1.0,
-    )
-    assert washed == {"jit": 1.0}
-    assert confirmed == {"reg": 2.0}
-
-
-def test_confirm_flags_keeps_flags_it_cannot_recheck():
-    # No prev samples for the query: nothing to recompute against —
-    # the original flag stands rather than silently vanishing.
-    confirmed, washed = bench._confirm_flags(
-        {"q": 1.5},
-        {"q": [1.5]},
-        [0.1],
-        {"q": [1.5]},
-        [0.1],
-        {},
-        [0.1],
-        envelope=1.0,
-    )
-    assert confirmed == {"q": 1.5}
-    assert washed == {}
-
-
-def test_confirm_flags_respects_envelope():
-    # Confirmation ratio lands above the 1.25 bar but inside the
-    # fixed-overhead envelope of a host-speed mismatch: not
-    # attributable, washes out.
-    confirmed, washed = bench._confirm_flags(
-        {"q": 1.6},
-        {"q": [1.4, 1.4]},
-        [0.1, 0.1],
-        {"q": [1.4]},
-        [0.1],
-        {"q": [1.0, 1.0]},
-        [0.1, 0.1],
-        envelope=1.5,
-    )
-    assert confirmed == {}
-    assert washed == {"q": 1.4}
-
-
-def test_innocence_envelope_bounds_quiet_host_overcorrection():
-    """The canary is pure CPU; a query's fixed overhead (scheduling,
-    state-store commits) does not shrink on a quieter host, so under
-    host-speed ratio R < 1 an unchanged query can innocently
-    normalize up to 1/R. Live case: a 0.525x host flagged 17
-    zero-code-change queries at 1.26-1.43x — all inside the 1.9x
-    envelope, none a regression."""
-    assert bench._innocence_envelope(0.525) == pytest.approx(1 / 0.525)
-    # equal-speed or loaded current host: fixed overhead can only
-    # flatter the ratio, every above-bar flag is attributable
-    assert bench._innocence_envelope(1.0) == 1.0
-    assert bench._innocence_envelope(1.6) == 1.0
-    # no prior canary: no correction to over-apply
-    assert bench._innocence_envelope(None) == 1.0
-    assert bench._innocence_envelope(0) == 1.0
-
-
-def test_await_quiet_host_waits_then_proceeds(monkeypatch):
-    vals = iter([[5.0, 0, 0], [5.0, 0, 0], [0.5, 0, 0]])
-    monkeypatch.setattr(bench, "_loadavg", lambda: next(vals))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    out = bench._await_quiet_host(2.0, 60, poll=10)
-    assert out["waited_sec"] == 20
-    assert out["gave_up"] is False
-    assert out["loadavg_after"] == [0.5, 0, 0]
-
-
-def test_await_quiet_host_gives_up_at_max_wait(monkeypatch):
-    monkeypatch.setattr(bench, "_loadavg", lambda: [9.0, 0, 0])
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    out = bench._await_quiet_host(2.0, 30, poll=10)
-    assert out["waited_sec"] == 30
-    assert out["gave_up"] is True
-
-
-def test_await_quiet_host_no_loadavg_is_noop(monkeypatch):
-    # off-Linux (no /proc/loadavg) the gate can't see load: no wait
-    monkeypatch.setattr(bench, "_loadavg", lambda: None)
-    out = bench._await_quiet_host(2.0, 30)
-    assert out["waited_sec"] == 0 and out["gave_up"] is False
-
-
-def test_flag_regressions_threshold_and_floor():
-    normalized = {"big": 1.5, "small": 3.0, "fine": 1.2, "worse": 1.9}
-    cur = {"big": 2.0, "small": 0.05, "fine": 4.0, "worse": 1.0}
-    flagged = bench._flag_regressions(normalized, cur)
-    # sub-floor 'small' is jitter, 'fine' is under the bar; output is
-    # worst-first
-    assert list(flagged.items()) == [("worse", 1.9), ("big", 1.5)]
-    assert bench._flag_regressions({}, {}) == {}
-
-
-def test_flag_regressions_floor_applies_to_prev_side_too():
-    # A jitter-lucky 0.05s prev min against a 0.30s current sample is
-    # a 6x ratio made entirely of the noise the floor suppresses — the
-    # floor must bind BOTH rounds' samples.
-    normalized = {"jitter": 6.0, "real": 1.5}
-    cur = {"jitter": 0.30, "real": 2.0}
-    prev = {"jitter": 0.05, "real": 1.3}
-    assert bench._flag_regressions(normalized, cur, prev) == {"real": 1.5}
-
-
-def test_prev_round_data_logs_sampleless_shape_downgrade(tmp_path, capsys):
-    """The shape-matched winner can be a sample-less stdout capture
-    (a headline run following a round whose only per-pass record is
-    an --all sweep) — the run_min fallback is then chosen even though
-    a per-pass-capable record exists. The shape match still wins (the
-    ~12% shape bias is uniform and sits near the 15% uniform-shift
-    bar) but the downgrade must be logged and recorded, never
-    invisible."""
-    _write_json(
-        tmp_path / "BENCH_FULL_r09.json",
-        {
-            "noise": {"canary_sec": [0.1]},
-            "all": True,
-            "samples": {"q": [1.0, 1.0]},
-        },
-    )
-    _write_json(
-        tmp_path / "BENCH_r09.json",
-        {"noise": {"canary_sec": [0.12]}, "all": False},
-    )
-    data, rnd, fname = bench._prev_round_data(str(tmp_path), 10, run_all=False)
-    assert fname == "BENCH_r09.json"
-    assert data["_selection"]["method_downgrade"] == "run_min"
-    assert data["_selection"]["per_pass_alternative"] == "BENCH_FULL_r09.json"
-    assert "run_min" in capsys.readouterr().err
-    # Same-shape record WITH samples: no downgrade, no marker.
-    data, _, fname = bench._prev_round_data(str(tmp_path), 10, run_all=True)
-    assert fname == "BENCH_FULL_r09.json"
-    assert "_selection" not in data
-
-
-def test_confirmation_controls_pick_stable_in_band():
-    # Preferred controls: unflagged, min wall inside
-    # [_REGRESSION_MIN_SEC, _CONTROL_MAX_SEC], most stable across the
-    # steady passes first, cheapest on ties. The flagged query never
-    # qualifies; out-of-band walls (sub-floor jitter, the 10 s
-    # composite) fill in only when the band runs dry, nearest first.
-    samples = {
-        "flagged": [3.0, 3.0, 3.0],
-        "stable": [0.5, 0.5, 0.5],
-        "stable2": [1.0, 1.01, 1.0],
-        "jittery": [0.5, 1.0, 0.5],
-        "tiny": [0.05, 0.05, 0.05],
-        "huge": [10.0, 10.0, 10.0],
-    }
-    got = bench._confirmation_controls(samples, {"flagged"}, n_controls=3)
-    assert got == ["stable", "stable2", "jittery"]
-    # Every above-bar query is excluded from control duty — envelope
-    # suspects and cap-overflow flags are exactly the queries whose
-    # walls are in question, so they cannot anchor the load factors.
-    got = bench._confirmation_controls(
-        samples, {"flagged", "stable", "stable2"}, n_controls=2
-    )
-    assert got == ["jittery", "tiny"]
-    # Band exhausted: nearest out-of-band wall (tiny, 0.2 from the
-    # floor) beats the 10 s composite (7.0 past the cap).
-    got = bench._confirmation_controls(samples, {"flagged"}, n_controls=4)
-    assert got == ["stable", "stable2", "jittery", "tiny"]
-
-
-def test_confirm_flags_wide_matrix_needs_controls():
-    """The production path the pre-r11 tests never exercised: a
-    combined matrix wide enough for wall-derived load factors
-    (>= _MIN_QUERIES_FOR_WALL_LOAD queries) whose CONFIRMATION
-    columns carry walls for the flagged queries only. With a
-    mostly-jitter flag set (4 stall-inflated flags + 1 real 2x
-    regression) and a 2x-loaded confirmation window, the thin
-    confirm columns read the load off the flagged queries themselves
-    (median ~1) and falsely confirm the jitter flags; control
-    queries riding along anchor the load at its true 2x and the
-    jitter washes out while the real regression survives."""
-    controls = [f"q{i}" for i in range(8)]
-    jits = [f"jit{i}" for i in range(4)]
-    prev_samples = {n: [1.0, 1.0, 1.0] for n in controls + jits + ["reg"]}
-    prev_canaries = [0.1, 0.1, 0.1]
-    # Main passes: controls clean at their base 1.0; the four jitter
-    # queries hit a stall all three passes (true base 1.0, walls
-    # 2.0); reg genuinely regressed to 2.0.
-    samples = {n: [1.0, 1.0, 1.0] for n in controls}
-    samples.update({n: [2.0, 2.0, 2.0] for n in jits})
-    samples["reg"] = [2.0, 2.0, 2.0]
-    canaries = [0.1, 0.1, 0.1]
-    flagged = {n: 2.0 for n in jits + ["reg"]}
-    # Confirmation window loaded 2x (canaries track it): the jitter
-    # queries land back at base-times-load 2.0, reg at 4.0.
-    extra_canaries = [0.2, 0.2, 0.2]
-    extra_flagged_only = {n: [2.0, 2.0, 2.0] for n in jits}
-    extra_flagged_only["reg"] = [4.0, 4.0, 4.0]
-    confirmed, washed = bench._confirm_flags(
-        flagged,
-        samples,
-        canaries,
-        extra_flagged_only,
-        extra_canaries,
-        prev_samples,
-        prev_canaries,
-        envelope=1.0,
-    )
-    # The defect the controls close: jitter "confirmed" off its own
-    # thin load estimate.
-    assert set(jits) & set(confirmed)
-    # With controls in the confirmation passes the load factors come
-    # from 8 independent walls: jitter washes out at ~1.0, the real
-    # regression still confirms at 2x.
-    extra_with_controls = dict(extra_flagged_only)
-    extra_with_controls.update({n: [2.0, 2.0, 2.0] for n in controls})
-    confirmed, washed = bench._confirm_flags(
-        flagged,
-        samples,
-        canaries,
-        extra_with_controls,
-        extra_canaries,
-        prev_samples,
-        prev_canaries,
-        envelope=1.0,
-    )
-    assert set(confirmed) == {"reg"}
-    assert confirmed["reg"] == pytest.approx(2.0, abs=0.05)
-    assert set(washed) == set(jits)
-    assert all(r == pytest.approx(1.0, abs=0.05) for r in washed.values())
-
-
-def test_confirm_flags_flag_dominated_window_still_washes_out():
-    """The r11 control machinery capped controls at
-    _MIN_QUERIES_FOR_WALL_LOAD (8) while the confirmed set could
-    reach SPARK_GRAFT_CONFIRM_CAP (40): with 27 jitter flags and 8
-    controls in a 2x-loaded confirmation window, the confirm-column
-    load median over ALL walls is dominated by the flagged queries
-    (whose ratio-to-own-min reads ~1: loaded confirm wall over a
-    main-pass min that was stall-inflated the same way), so the
-    window reads ~1x load and the jitter falsely confirms.
-    load_exclude bars every above-bar query from the load medians —
-    the confirm columns' load comes from the 8 controls alone, the
-    jitter washes out at ~1.0, and the one real regression still
-    confirms at 2x."""
-    controls = [f"c{i}" for i in range(8)]
-    jits = [f"jit{i}" for i in range(27)]
-    prev_samples = {n: [1.0, 1.0, 1.0] for n in controls + jits + ["reg"]}
-    prev_canaries = [0.1, 0.1, 0.1]
-    # Main passes quiet; the 27 jitter queries hit stalls all three
-    # passes (true base 1.0, walls 2.0); reg genuinely regressed.
-    samples = {n: [1.0, 1.0, 1.0] for n in controls}
-    samples.update({n: [2.0, 2.0, 2.0] for n in jits})
-    samples["reg"] = [2.0, 2.0, 2.0]
-    canaries = [0.1, 0.1, 0.1]
-    flagged = {n: 2.0 for n in jits + ["reg"]}
-    # Confirmation window loaded 2x (canaries track it): jitter lands
-    # back at base-times-load 2.0, reg at 4.0, controls at 2.0.
-    extra_canaries = [0.2, 0.2, 0.2]
-    extra = {n: [2.0, 2.0, 2.0] for n in jits + controls}
-    extra["reg"] = [4.0, 4.0, 4.0]
-    confirmed, washed = bench._confirm_flags(
-        flagged,
-        samples,
-        canaries,
-        extra,
-        extra_canaries,
-        prev_samples,
-        prev_canaries,
-        envelope=1.0,
-        load_exclude=set(flagged),
-    )
-    assert set(confirmed) == {"reg"}
-    assert confirmed["reg"] == pytest.approx(2.0, abs=0.05)
-    assert set(washed) == set(jits)
-    assert all(r == pytest.approx(1.0, abs=0.05) for r in washed.values())
-
-
-def test_min_pass_stage_sec_tracks_the_min_wall_pass():
-    """Stage attribution must come from the pass that produced the
-    recorded min wall — the last pass shipped combine: 21.6 s stage
-    attribution in the clean r10 record against the same record's
-    15.9 s min (a loaded final pass). Empty stage dicts (failed
-    capture) are never picked."""
-    stage_dicts = [
-        {"combine": 21.6, "usage": 11.1},
-        {"combine": 6.4, "usage": 9.5},
-        {"combine": 8.0, "usage": 10.0},
-    ]
-    walls = [32.7, 15.9, 18.0]
-    picked = bench._min_pass_stage_sec(stage_dicts, walls)
-    assert picked == {"combine": 6.4, "usage": 9.5}
-    assert sum(picked.values()) == pytest.approx(walls[1], rel=0.01)
-    # A pass whose capture failed (empty dict) can't win even with
-    # the min wall; the wall gap lands in inter_stage_overhead.
-    assert bench._min_pass_stage_sec([{}, {"a": 1.0}], [1.0, 2.0]) == {
-        "a": 1.0,
-        "inter_stage_overhead": 1.0,
-    }
-    assert bench._min_pass_stage_sec([], []) is None
-    assert bench._min_pass_stage_sec([{}, {}], [1.0, 2.0]) is None
-
-
-def test_min_pass_stage_sec_attributes_inter_stage_residual():
-    """The instrumented stages cover DAG work only; the r11 record
-    read 11.59 s of stages against a 13.19 s min wall with the ~1.6 s
-    of session/scan work between stage timers silently missing. The
-    residual is now its own key so the stage table sums to the wall
-    it annotates; a zero/negative residual (timer skew) adds no
-    key."""
-    picked = bench._min_pass_stage_sec(
-        [{"combine": 6.0, "usage": 5.59}], [13.19]
-    )
-    assert picked["inter_stage_overhead"] == pytest.approx(1.6, abs=0.01)
-    assert sum(picked.values()) == pytest.approx(13.19, abs=0.001)
-    # Stage sum == wall: nothing to attribute.
-    assert "inter_stage_overhead" not in bench._min_pass_stage_sec(
-        [{"a": 2.0}], [2.0]
-    )
-    # Timer skew (stages sum past the wall) must not invent negative
-    # overhead.
-    assert "inter_stage_overhead" not in bench._min_pass_stage_sec(
-        [{"a": 2.5}], [2.0]
-    )
-
-
-def test_adjudicate_prev_shift_verdicts():
-    """A uniform shift the previous record demoted is settled by this
-    run's median vs that record: ~1 means the shifted level
-    reproduced (engine-wide change, now baked into the anchor), ~1/U
-    means the inflation unwound (host artifact), anything else stays
-    ambiguous. Without this, a genuine engine-wide regression is
-    demoted against a pre-regression anchor every round forever."""
-    prev = {"uniform_shift": 1.35}
-    out = bench._adjudicate_prev_shift(prev, 1.02)
-    assert out["verdict"] == "engine_wide_persisted"
-    out = bench._adjudicate_prev_shift(prev, 0.74)  # ~1/1.35
-    assert out["verdict"] == "host_artifact_evaporated"
-    out = bench._adjudicate_prev_shift(prev, 1.2)
-    assert out["verdict"] == "ambiguous"
-    # Flattering direction: a demoted 0.7x shift that evaporates
-    # reads ~1.43 on the next run.
-    out = bench._adjudicate_prev_shift({"uniform_shift": 0.7}, 1.43)
-    assert out["verdict"] == "host_artifact_evaporated"
-    # Modest shifts leave the two tolerance bands overlapping (u=1.18
-    # -> 1/u=0.847, bands [0.9,1.1] and [0.747,0.947] share
-    # [0.9,0.947]); a median inside the overlap is consistent with
-    # both hypotheses and must not be resolved by branch order.
-    out = bench._adjudicate_prev_shift({"uniform_shift": 1.18}, 0.92)
-    assert out["verdict"] == "ambiguous" and out["reason"] == "bands_overlap"
-    # A persisted SPEEDUP adjudicates as persisted too — the caller
-    # names the noise key by direction (engine_wide_speedup, no
-    # bisect alarm).
-    out = bench._adjudicate_prev_shift({"uniform_shift": 0.7}, 1.0)
-    assert out["verdict"] == "engine_wide_persisted"
-    # A run that flagged itself noisy cannot attribute either way —
-    # even a dead-center median stays ambiguous (same demotion
-    # discipline as per-query flags).
-    out = bench._adjudicate_prev_shift(prev, 1.0, cur_run_noisy=True)
-    assert out["verdict"] == "ambiguous" and out["reason"] == "cur_run_noisy"
-    # Nothing to adjudicate.
-    assert bench._adjudicate_prev_shift({}, 1.0) is None
-    assert bench._adjudicate_prev_shift(None, 1.0) is None
-    assert bench._adjudicate_prev_shift(prev, None) is None
-
-
-def test_adjudicate_prev_shift_distrusts_unclean_anchor():
-    """A shift recorded by a run that marked ITSELF noisy was measured
-    off walls that run distrusts — adjudicating it would re-launder
-    the unreliable half of the ratio into an engine-wide verdict.
-    Current writers park such shifts under
-    uniform_shift_vs_noisy_anchor (ignored here entirely); a pre-r12
-    record carrying the unqualified key plus noisy_host forces
-    ambiguous."""
-    out = bench._adjudicate_prev_shift(
-        {"uniform_shift": 1.35, "noisy_host": True}, 1.0
-    )
-    assert out["verdict"] == "ambiguous" and out["reason"] == "prev_run_noisy"
-    # The qualified key is not adjudicable at all: a shift measured
-    # against a noisy ANCHOR two rounds back says nothing about the
-    # engine (bench.py records it only for telemetry).
-    assert (
-        bench._adjudicate_prev_shift(
-            {"uniform_shift_vs_noisy_anchor": 1.35}, 1.0
-        )
-        is None
-    )
+    assert list(line["queries"]) == bench.HEADLINE and len(bench.HEADLINE) == 62
+    assert line["value"] == round(sum(line["queries"].values()), 3)
+    assert line["timing"] == "construction+action, min of 3 interleaved passes"
+    assert len(last) < 2000
+    assert os.listdir(tmp_path) == [line["detail_file"]] == ["BENCH_DETAIL_r01.json"]
 
 
 # ──────────────── scale_smoke over-scale refusal path ─────────────

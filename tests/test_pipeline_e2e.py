@@ -137,7 +137,7 @@ def test_batch_pipeline_materializes_all_layers(spark, tmp_path):
     weather_leg = s["extract_weather"] + s["format_weather"]
     spine = max(flights_leg, weather_leg) + s["combine"] + s["usage"] + s["counts"]
     assert spine <= total + 0.05
-    # bench.py reads the module-level copy for the e2e detail row
+    # scale_smoke.py reads the module-level copy for the e2e row
     from skysafe_datalake_spark.plans import pipeline as plans_pipeline
 
     assert plans_pipeline.LAST_STAGE_SECONDS == result.stage_seconds
@@ -479,6 +479,74 @@ def test_zero_document_fetch_empties_the_raw_partition(spark, tmp_path):
     part = _raw_partition(cat, "open_meteo", "weather")
     (data,) = [n for n in os.listdir(part) if not n.startswith(".")]
     assert os.path.getsize(os.path.join(part, data)) == 0
+
+
+def _layer_files(cat, layer, ts):
+    date, hour = LakeCatalog.partition_values(ts)
+    part = os.path.join(cat.path(*layer), f"date={date}", f"hour={hour}")
+    return [os.path.join(part, name) for name in _partition_files(part)]
+
+
+def test_zero_row_write_replaces_the_partition(spark, tmp_path):
+    """Writing 0 rows over a minute's 2 rows leaves that partition one
+    0-row file with the frame's schema: read_latest returns 0 rows, not
+    the 2 old ones."""
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    layer = ("formatted", "opensky", "flights")
+    df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "icao24 string, lat double")
+    cat.write(df, *layer, ts=FIXTURE_TS)
+    assert cat.read_latest(spark, *layer).count() == 2
+
+    cat.write(df.limit(0), *layer, ts=FIXTURE_TS)
+    latest = cat.read_latest(spark, *layer)
+    assert latest.count() == 0
+    assert latest.columns == ["icao24", "lat", "date", "hour"]
+    (data,) = _layer_files(cat, layer, FIXTURE_TS)
+    assert spark.read.parquet(data).schema == df.schema
+
+
+def test_zero_row_write_makes_a_new_hour_the_latest(spark, tmp_path):
+    """0 rows written for a later hour create that hour's partition, so
+    read_latest serves it (0 rows) instead of the earlier hour's rows."""
+    from datetime import timedelta
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    layer = ("formatted", "open_meteo", "weather")
+    df = spark.createDataFrame([(1, 20.5), (2, 21.0)], "station_id int, temp double")
+    cat.write(df, *layer, ts=FIXTURE_TS)
+    later = FIXTURE_TS + timedelta(hours=1)
+    cat.write(df.where("temp > 100"), *layer, ts=later)
+    assert len(_layer_files(cat, layer, later)) == 1
+    latest = cat.read_latest(spark, *layer)
+    assert latest.count() == 0
+    # A fresh catalog (no recorded schema) reads the empty file's schema.
+    fresh = LakeCatalog(str(tmp_path / "lake")).read_latest(spark, *layer)
+    assert fresh.count() == 0 and fresh.columns[:2] == ["station_id", "temp"]
+
+
+def test_empty_snapshot_minute_serves_no_stale_aircraft(spark, tmp_path):
+    """A minute whose snapshot has no aircraft, after a 3-aircraft
+    minute of the same hour, reads back 0 rows from its formatted
+    flights, enriched and usage layers."""
+    from datetime import timedelta
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    run_batch_pipeline(
+        spark, cat, *fixture_clients(states_payload(_phase_rows(3))), ts=FIXTURE_TS
+    )
+    layers = (
+        ("formatted", "opensky", "flights"),
+        ("enriched", "skysafe", "flights"),
+        ("usage", "skysafe", "flights"),
+    )
+    assert [cat.read_latest(spark, *layer).count() for layer in layers] == [3, 3, 3]
+
+    ts = FIXTURE_TS + timedelta(minutes=1)
+    run_batch_pipeline(spark, cat, *fixture_clients(states_payload([])), ts=ts)
+    assert [cat.read_latest(spark, *layer).count() for layer in layers] == [0, 0, 0]
+    assert cat.read_latest(spark, "formatted", "open_meteo", "weather").count() > 0
+    for layer in layers:
+        assert len(_layer_files(cat, layer, ts)) == 1, layer
 
 
 def test_flights_stream_sees_every_minute_of_an_hour(spark, tmp_path):

@@ -34,8 +34,11 @@ code is a conscious, reviewed act even when it passes rules 1-3.
 from __future__ import annotations
 
 import ast
+import os
 import re
 from pathlib import Path
+
+import pytest
 
 PKG = Path(__file__).resolve().parents[1] / "skysafe_datalake_spark"
 
@@ -464,3 +467,65 @@ def test_conf_scopes_serialize_across_threads(spark):
         t.join(60)
     assert seen == {"first": "9", "second": "11"}
     assert spark.conf.get(key) == saved
+
+
+def test_stateful_shuffle_partitions_sizing():
+    from skysafe_datalake_spark.streaming.driver import (
+        stateful_shuffle_partitions,
+    )
+
+    # replay volume: floor wins
+    assert stateful_shuffle_partitions(10_000) == 8
+    assert stateful_shuffle_partitions(10_000, lo=4) == 4
+    # 64x smoke volume: 6.4M rows / 200k = 32 stores
+    assert stateful_shuffle_partitions(6_400_000) == 32
+    # unbounded input: hi caps store instances
+    assert stateful_shuffle_partitions(10**9) == 128
+    assert stateful_shuffle_partitions(0) == 8
+
+
+def test_stateful_sizing_pinned_at_bench_scale():
+    """Pin the five stateful queries' BENCH-SCALE partition counts.
+
+    Round 5 introduced data-sized state-store parallelism and its one
+    coinciding bench regression (streaming_stateful_running_agg +30%)
+    could not be ruled a partition-count change or noise. This test
+    recomputes each site's Observation row count from the same sf0.1
+    events table the bench replays and asserts the helper still lands
+    on the measured replay floors (8/8/4/4/4) — so any future bench
+    delta on these queries is provably not a sizing change.
+    """
+    import duckdb
+
+    from tests.conftest import SF_SMALL
+
+    from skysafe_datalake_spark.streaming.driver import (
+        stateful_shuffle_partitions,
+    )
+
+    events = os.path.join(os.path.dirname(SF_SMALL), "sf0.1", "events.parquet")
+    if not os.path.exists(events):
+        pytest.skip("sf0.1 testdata not present")
+    con = duckdb.connect()
+    total, clicks, purchases, dup_extra = con.execute(
+        f"""SELECT count(*),
+                   count(*) FILTER (event_type = 'click'),
+                   count(*) FILTER (event_type = 'purchase'),
+                   count(*) FILTER (event_id % 3 = 0)
+            FROM '{events}'"""
+    ).fetchone()
+    con.close()
+    # workload/pipeline.py stateful sites, same Observation inputs:
+    #   streaming_stateful_running_agg: all events, default lo=8
+    assert stateful_shuffle_partitions(total) == 8
+    #   streaming_interval_join: clicks + purchases, default lo=8
+    assert stateful_shuffle_partitions(clicks + purchases) == 8
+    #   streaming_left/full_outer_join: clicks + purchases + 2
+    #   sentinel rows, lo=4 (4 state stores per partition)
+    assert stateful_shuffle_partitions(clicks + purchases + 2, lo=4) == 4
+    assert stateful_shuffle_partitions(clicks + purchases + 2, lo=4) == 4
+    #   streaming_dedup_watermark: events + every-3rd re-sent, lo=4
+    assert stateful_shuffle_partitions(total + dup_extra, lo=4) == 4
+    #   streaming_static_join (sized in round 9): all events, lo=4 —
+    #   complete-mode hour x category cells, state is a handful of rows
+    assert stateful_shuffle_partitions(total, lo=4) == 4
