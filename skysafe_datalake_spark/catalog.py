@@ -290,28 +290,38 @@ class LakeCatalog:
         ``src/helpers.py:126-154``). Discovery is a directory listing
         (no data read) on any filesystem the session can reach —
         os.listdir locally, the Hadoop FileSystem client on URI roots
-        (file://, s3a://, hdfs://). If the listing itself fails, falls
-        back to a Spark-side distinct() over the partition columns —
-        a partition-values scan instead of a listing, but correct on
-        any filesystem Spark can read (returning ALL partitions would
-        be a silent semantic downgrade).
+        (file://, s3a://, hdfs://) — and only the latest partition's
+        directory is loaded, with the entity as ``basePath`` so
+        ``date``/``hour`` keep their discovered types: the read is O(1)
+        in history and never lists with a Spark job. If the listing
+        itself fails, falls back to a Spark-side distinct() over the
+        partition columns — a partition-values scan instead of a
+        listing, but correct on any filesystem Spark can read
+        (returning ALL partitions would be a silent semantic downgrade).
 
         Without a ``schema``, the data schema is the one this instance
         recorded when it wrote the latest partition (no footer-reading
         job). When the latest partition is not the recorded one (another
-        writer wrote a newer hour) or nothing was recorded, the schema
-        is inferred from the latest partition's files. Either way
-        ``date``/``hour`` come from partition discovery with their
-        inferred types."""
+        writer wrote a newer hour) or nothing was recorded, it is
+        inferred from the latest partition's files."""
         latest = self._latest_partition(layer, source, entity, spark)
-        if schema is None and latest is not None:
-            schema = self._latest_schema(
-                spark, layer, source, entity, latest, fmt, options
-            )
+        if latest is not None:
+            target = self.path(layer, source, entity)
+            recorded = self._written.get(target)
+            if schema is None and recorded is not None and recorded[:2] == latest:
+                schema = recorded[2]
+            reader = spark.read.format(fmt).options(**(options or {}))
+            if schema is not None:
+                reader = reader.schema(schema)
+            date, hour = latest
+            df = reader.option("basePath", target).load(f"{target}/date={date}/hour={hour}")
+            # Redundant with the path, but keeps the pruning visible in the
+            # plan as PartitionFilters.
+            return df.where((F.col("date") == date) & (F.col("hour") == hour))
         df = self.read(
             spark, layer, source, entity, fmt=fmt, options=options, schema=schema
         )
-        if latest is None and {"date", "hour"} <= set(df.columns):
+        if {"date", "hour"} <= set(df.columns):
             row = (
                 df.select("date", "hour")
                 .distinct()
@@ -332,31 +342,7 @@ class LakeCatalog:
                 return df.where(
                     (F.col("date") == F.lit(d_v)) & (F.col("hour") == F.lit(h_v))
                 )
-        if latest is None:
-            return df
-        date, hour = latest
-        return df.where((F.col("date") == date) & (F.col("hour") == hour))
-
-    def _latest_schema(
-        self, spark, layer, source, entity, latest, fmt, options
-    ) -> StructType:
-        """Data schema for reading the ``latest`` (date, hour)
-        partition: the recorded one if this instance wrote it, else
-        inferred from that partition's files alone. Inferring over the
-        whole entity would take the first file's footer, which may be
-        an older partition's schema."""
-        target = self.path(layer, source, entity)
-        date, hour = latest
-        recorded = self._written.get(target)
-        if recorded is not None and recorded[:2] == (date, hour):
-            return recorded[2]
-        inferred = (
-            spark.read.format(fmt)
-            .options(**(options or {}))
-            .load(f"{target}/date={date}/hour={hour}")
-            .schema
-        )
-        return _data_schema(inferred)
+        return df
 
     def compact(
         self,

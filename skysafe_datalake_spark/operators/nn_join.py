@@ -6,11 +6,12 @@ Spark-first re-expression with two physical strategies:
 
 ``argmin`` (default for k=1)
     broadcast cross join → per-row distance → ``groupBy(keys).agg(
-    min(struct(order, payload)))``. Hash aggregation with MAP-SIDE
-    PARTIAL COMBINE: each task reduces its |right| candidates per key
-    to 1 *before* the shuffle, so the exchange carries exactly one row
-    per left row regardless of |right|. No sort, no window. This is
-    the plan that survives 100 TB: shuffle volume == |left|.
+    min(struct(order, payload)))``. The min over a struct runs as
+    SortAggregate (struct buffers aren't hash-aggregatable), with a
+    Sort on both sides of the exchange, but it still combines
+    MAP-SIDE: each task reduces its |right| candidates per key to 1
+    *before* the shuffle, so the exchange carries exactly one row per
+    left row regardless of |right|. No window. Shuffle volume == |left|.
 
 ``window`` (generic k ≥ 1)
     broadcast cross join → ``row_number() OVER (PARTITION BY keys

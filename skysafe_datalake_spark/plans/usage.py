@@ -5,13 +5,15 @@ The reference collect()s every row to the Python driver and bulk-
 posts to Elasticsearch — the one place it abandons distributed
 execution (SURVEY.md §3 step 5). Engine-native replacement:
 - the wide projection / w_-prefix strip stays a single select (P4);
-- upsert-by-key (ES ``_id=icao24``) becomes a deterministic
-  latest-row-per-key reduction (argmax over extracted_at) — the same
-  no-duplicate serving semantics, computed distributively;
+  a minute's enriched rows are already one per ``icao24`` (the NN
+  join's argmin groups by it), so the minute's usage needs no dedup;
+- upsert-by-key (ES ``_id=icao24``) across minutes becomes a
+  deterministic latest-row-per-key merge (argmax over extracted_at)
+  into a hash-bucketed table — the stream's extra sink;
 - lat/lon merge into a ``location`` struct (geo_point shape).
 A distributed ES sink would attach here via the es-hadoop connector
-(``org.elasticsearch.spark.sql``, es.mapping.id=icao24) — not
-available in this container, so parquet is the serving sink.
+(``org.elasticsearch.spark.sql``, es.mapping.id=icao24) when its jar
+is on the classpath; parquet is the serving sink otherwise.
 """
 
 from __future__ import annotations
@@ -70,18 +72,11 @@ def usage_projection(enriched: DataFrame) -> DataFrame:
 def latest_per_key(df: DataFrame, key: str = "icao24", ts: str = "extracted_at") -> DataFrame:
     """Keyed upsert semantics: keep the newest row per key.
 
-    min(struct(-ord, payload)) == argmax with a total order (ties by
-    payload — deterministic, unlike dropDuplicates). Partial
-    aggregation combines map-side, so the shuffle carries ≤1 row per
-    key per task — the MERGE-into-keyed-table topology at any scale.
-
-    Two ordering guards (round 9): a NULL timestamp LOSES to every
-    real row (a null first field would otherwise WIN min(struct) and
-    a single unparseable extracted_at would beat all future upserts
-    for its key forever — same hazard operators.nn_join._argmin
-    flags), and recency compares at MICROSECOND precision
-    (unix_timestamp truncates to whole seconds, which let payload
-    bytes pick the survivor among same-second rows).
+    min(struct(null flag, -micros, payload)) is an argmax with a total
+    order (ties by payload — deterministic, unlike dropDuplicates), and
+    partial aggregation combines map-side. A NULL timestamp loses to
+    every real row (a null first field would win min(struct) forever),
+    and recency compares at microsecond precision, not whole seconds.
     """
     payload = [c for c in df.columns if c != key]
     ordered = df.select(
@@ -108,7 +103,7 @@ def with_location(df: DataFrame) -> DataFrame:
 
 
 def build_usage(enriched: DataFrame) -> DataFrame:
-    return with_location(latest_per_key(usage_projection(enriched)))
+    return with_location(usage_projection(enriched))
 
 
 def upsert_partitioned(
@@ -122,23 +117,15 @@ def upsert_partitioned(
     """MERGE-equivalent keyed upsert into a hash-bucketed parquet
     table: only the buckets the batch touches are read and rewritten.
 
-    Layout: the table is partitioned by ``kb = pmod(xxhash64(key),
-    n_buckets)``. A micro-batch touching k keys reads ≤ min(k,
-    n_buckets) partitions, merges with :func:`latest_per_key`, and
-    writes back through DYNAMIC partition overwrite — one write job,
-    per-partition swap at commit (no staging double-write, untouched
-    partitions' files are never rewritten). Work per batch is
-    O(touched buckets), not O(table) — the property the round-1
-    full-table rewrite lacked (VERDICT.md #5).
-
-    Self-read is safe: with dynamic overwrite, existing files are
-    replaced at job COMMIT, after the merge tasks (which scan them)
-    have finished.
-
-    Size ``n_buckets`` so one bucket ≈ a few hundred MB at the target
-    key cardinality (the usage table holds one row per key). With
-    Delta/Iceberg this whole function becomes ``MERGE INTO``; the
-    surrounding topology is unchanged.
+    The table is partitioned by ``kb = pmod(xxhash64(key),
+    n_buckets)``. A batch touching k keys reads ≤ min(k, n_buckets)
+    partitions, merges them with :func:`latest_per_key`, and writes
+    back through dynamic partition overwrite: one write job, untouched
+    partitions never rewritten, so work is O(touched buckets), not
+    O(table). The self-read is safe because dynamic overwrite replaces
+    files at job commit, after the merge tasks have scanned them. Size
+    ``n_buckets`` so one bucket is a few hundred MB at the target key
+    count; with Delta/Iceberg this becomes ``MERGE INTO``.
     """
     spark = batch.sparkSession
     bucketed = batch.withColumn(

@@ -3,18 +3,16 @@ the reference's cron-emulated stream (SURVEY.md §2.10: Airflow
 ``* * * * *`` + latest-partition reads + ES upsert,
 ``/root/reference/dags/sky_safe_dag.py:31-33``).
 
-Topology:
-- ``readStream`` file source over the raw flights layer (new snapshot
-  files are discovered automatically — replaces S7 latest-partition
-  scanning);
-- ``foreachBatch`` runs the combine/risk/ML stage per micro-batch.
-  The reference's per-batch model fit and μ+2σ threshold are
-  *naturally* micro-batch-scoped computations, which is exactly what
-  foreachBatch gives (and why this pipeline is not expressible as a
-  pure continuous-streaming plan — SURVEY.md §7.4);
-- sink: keyed upsert into the usage table (latest row per icao24
-  merged with existing state), the engine-native equivalent of the
-  reference's ES ``_id=icao24`` bulk upsert.
+``run_flights_stream`` reads the catalog's raw flights layer as a
+file stream (new snapshot files are discovered automatically —
+replaces S7 latest-partition scanning). Its ``foreachBatch`` runs the
+batch DAG's minute, ``plans.pipeline.run_minute``, once per snapshot
+of the micro-batch in ``_extracted_at`` order, so the stream writes the
+same layers against the latest formatted weather. The per-minute model
+fit and μ+2σ threshold are batch-scoped, which is why this pipeline is
+not a pure continuous-streaming plan (SURVEY.md §7.4). Each minute's
+usage rows are also upserted by ``icao24`` into a bucketed table, the
+engine-native equivalent of the reference's ES ``_id=icao24`` upsert.
 
 Also provided: ``windowed_event_counts`` — a *pure* streaming plan
 (watermark + tumbling event-time window) for late-data aggregation,
@@ -25,20 +23,21 @@ from __future__ import annotations
 
 import contextlib
 import threading
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from skysafe_datalake_spark.plans.combine import combine_enrich
-from skysafe_datalake_spark.plans.usage import build_usage, upsert_partitioned
+from skysafe_datalake_spark.catalog import LakeCatalog
+from skysafe_datalake_spark.plans.pipeline import run_minute
+from skysafe_datalake_spark.plans.usage import upsert_partitioned
 from skysafe_datalake_spark.sources import opensky
 
 
 def run_flights_stream(
     spark: SparkSession,
-    raw_dir: str,
-    weather: DataFrame,
+    catalog: LakeCatalog,
     usage_dir: str,
     checkpoint_dir: str,
     *,
@@ -46,31 +45,27 @@ def run_flights_stream(
     available_now: bool = False,
     n_buckets: int = 64,
 ) -> StreamingQuery:
-    """Raw OpenSky snapshots (JSON files) → enriched usage table,
+    """Raw OpenSky snapshots in ``catalog`` → its formatted, enriched
+    and usage layers, plus the keyed-upsert table at ``usage_dir``
+    (:func:`~skysafe_datalake_spark.plans.usage.upsert_partitioned`),
     once per trigger (the reference's 1-minute cadence).
-
-    ``available_now=True`` processes the current backlog and stops —
-    the batch-catchup mode (and what tests use).
-
-    The sink is a hash-bucketed keyed-upsert table
-    (:func:`~skysafe_datalake_spark.plans.usage.upsert_partitioned`):
-    each micro-batch rewrites only the key buckets it touches, so
-    per-minute work is O(batch keys), not O(table).
+    ``available_now=True`` processes the current backlog and stops.
+    A snapshot without ``_extracted_at`` fails its micro-batch.
     """
     raw_stream = (
         spark.readStream.schema(opensky.RAW_SCHEMA)
         .option("maxFilesPerTrigger", 96)
-        .json(raw_dir)
+        .json(catalog.path("raw", "opensky", "flights"))
     )
 
     def process_batch(raw_batch: DataFrame, batch_id: int) -> None:
-        if raw_batch.isEmpty():
-            return
-        flights = opensky.format_flights(raw_batch)
-        enriched, _info = combine_enrich(flights, weather)
-        upsert_partitioned(
-            build_usage(enriched), usage_dir, n_buckets=n_buckets
-        )
+        stamps = [r[0] for r in raw_batch.select("_extracted_at").distinct().collect()]
+        if None in stamps:
+            raise ValueError(f"batch {batch_id} has a snapshot without _extracted_at")
+        for stamp in sorted(stamps, key=datetime.fromisoformat):
+            snapshot = raw_batch.where(F.col("_extracted_at") == stamp)
+            minute = run_minute(spark, catalog, snapshot, ts=datetime.fromisoformat(stamp))
+            upsert_partitioned(minute.usage, usage_dir, n_buckets=n_buckets)
 
     writer = raw_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -379,17 +379,21 @@ def test_latest_partition_skips_foreign_and_empty_hour_dirs(spark, tmp_path):
 
 
 def test_streaming_flights_pipeline(spark, tmp_path, weather):
+    from datetime import datetime, timezone
+
     from skysafe_datalake_spark.streaming.driver import run_flights_stream
 
-    raw_dir = tmp_path / "raw"
-    raw_dir.mkdir()
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    cat.write(weather, "formatted", "open_meteo", "weather",
+              ts=datetime(2026, 2, 26, 14, 0, tzinfo=timezone.utc))
+    raw_dir = tmp_path / "lake" / "raw" / "opensky" / "flights" / "date=2026-02-26" / "hour=14"
+    raw_dir.mkdir(parents=True)
     (raw_dir / "snap1.json").write_text(
         json.dumps(_raw_payload(_heterogeneous_states(4)))
     )
     q = run_flights_stream(
         spark,
-        str(raw_dir),
-        weather,
+        cat,
         usage_dir=str(tmp_path / "usage"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
@@ -407,8 +411,7 @@ def test_streaming_flights_pipeline(spark, tmp_path, weather):
     (raw_dir / "snap2.json").write_text(json.dumps(payload))
     q2 = run_flights_stream(
         spark,
-        str(raw_dir),
-        weather,
+        cat,
         usage_dir=str(tmp_path / "usage"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,

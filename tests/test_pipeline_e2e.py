@@ -6,12 +6,13 @@ keyed-upsert sink's partition-pruning contract."""
 from __future__ import annotations
 
 import os
+from datetime import timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
 from skysafe_datalake_spark.catalog import LakeCatalog
-from skysafe_datalake_spark.plans.pipeline import run_batch_pipeline
+from skysafe_datalake_spark.plans.pipeline import format_weather_stage, run_batch_pipeline
 from skysafe_datalake_spark.plans.usage import build_usage, upsert_partitioned
 from skysafe_datalake_spark.sources import ingest
 from skysafe_datalake_spark.workload.pipeline import (
@@ -272,52 +273,162 @@ def test_batch_minute_invariants(spark, tmp_path):
         assert len(_partition_files(part)) == 1, layer
 
 
+def _clients_at(doc, at, stations=STATIONS):
+    """``fixture_clients`` whose fetches are stamped ``at``."""
+    transport = fixture_transport(doc, {(st[1], st[2]): weather_payload(st) for st in stations})
+    return (
+        ingest.OpenSkyClient(transport, client_id="fixture", client_secret="s", clock=lambda: at),
+        ingest.OpenMeteoClient(transport, clock=lambda: at),
+    )
+
+
+def _partition_rows(spark, cat, layer, ts):
+    """Sorted reprs of one layer partition's rows."""
+    return sorted(map(repr, spark.read.parquet(*_layer_files(cat, layer, ts)).collect()))
+
+
+def _drain(query):
+    try:
+        assert query.awaitTermination(300), "stream did not drain its backlog"
+    finally:
+        query.stop()
+
+
+# Two minutes a minute apart, in two hours: a raw write replaces its
+# hour partition, so two snapshots only coexist in the raw layer when
+# their hours differ.
+TWO_MINUTES = (FIXTURE_TS + timedelta(minutes=59), FIXTURE_TS + timedelta(minutes=60))
+
+
 def test_batch_and_stream_paths_agree(spark, tmp_path):
-    """One snapshot through the batch DAG and through the flights
-    stream (same weather) lands the same usage rows: the ML stage does
-    not depend on which path built its input."""
+    """Two minutes through the batch DAG, then the same raw layer
+    through the flights stream in one micro-batch: every layer
+    partition the stream writes, and its upsert table, equal the batch
+    DAG's. Both paths run one minute function."""
     import shutil
 
-    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
-    cat = LakeCatalog(str(tmp_path / "lake"))
-    run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
-    batch = cat.read_latest(spark, "usage", "skysafe", "flights").drop("date", "hour")
-
-    # The stream reads the very snapshot document the batch extracted.
-    date, hour = LakeCatalog.partition_values(FIXTURE_TS)
-    raw_part = os.path.join(
-        cat.path("raw", "opensky", "flights"), f"date={date}", f"hour={hour}"
-    )
-    raw_dir = tmp_path / "stream_raw"
-    raw_dir.mkdir()
-    for name in _partition_files(raw_part):
-        shutil.copy(os.path.join(raw_part, name), raw_dir / f"{name}.json")
-    weather = cat.read_latest(spark, "formatted", "open_meteo", "weather").drop(
-        "date", "hour"
-    )
     from skysafe_datalake_spark.streaming.driver import run_flights_stream
 
-    usage_dir = str(tmp_path / "stream_usage")
-    q = run_flights_stream(
-        spark,
-        str(raw_dir),
-        weather,
-        usage_dir,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    try:
-        assert q.awaitTermination(300), "stream did not drain its backlog"
-    finally:
-        q.stop()
-    stream = spark.read.parquet(usage_dir).drop("kb")
+    batch = LakeCatalog(str(tmp_path / "batch"))
+    for seed, ts in zip((7, 8), TWO_MINUTES):
+        doc = states_payload(_phase_rows(seed=seed))
+        run_batch_pipeline(spark, batch, *_clients_at(doc, ts), ts=ts)
+    stream = LakeCatalog(str(tmp_path / "stream"))
+    for part in (("raw",), ("formatted", "open_meteo")):
+        shutil.copytree(os.path.join(batch.root, *part), os.path.join(stream.root, *part))
 
-    assert sorted(stream.columns) == sorted(batch.columns)
-    cols = sorted(batch.columns)
-    got = sorted((tuple(r) for r in stream.select(cols).collect()), key=repr)
-    want = sorted((tuple(r) for r in batch.select(cols).collect()), key=repr)
+    usage_dir = str(tmp_path / "stream_usage")
+    q = run_flights_stream(spark, stream, usage_dir, str(tmp_path / "ckpt"), available_now=True)
+    _drain(q)
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) == 1  # one batch
+    for layer in (
+        ("formatted", "opensky", "flights"),
+        ("enriched", "skysafe", "flights"),
+        ("usage", "skysafe", "flights"),
+    ):
+        for ts in TWO_MINUTES:
+            want = _partition_rows(spark, batch, layer, ts)
+            assert len(want) == 300 and _partition_rows(spark, stream, layer, ts) == want
+
+    batch_usage = batch.read_latest(spark, "usage", "skysafe", "flights").drop("date", "hour")
+    upserted = spark.read.parquet(usage_dir).drop("kb")
+    assert sorted(upserted.columns) == sorted(batch_usage.columns)
+    cols = sorted(batch_usage.columns)
+    got = sorted((tuple(r) for r in upserted.select(cols).collect()), key=repr)
+    want = sorted((tuple(r) for r in batch_usage.select(cols).collect()), key=repr)
     assert len(want) == 300
     assert got == want
+
+
+def test_stream_batch_of_two_snapshots_serves_the_newest(spark, tmp_path):
+    """One micro-batch holding two snapshots of the same aircraft
+    upserts each aircraft's newer position, not the one nearer a
+    station."""
+    from skysafe_datalake_spark.streaming.driver import run_flights_stream
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    at_station = [dict(r, lat=st[1], lon=st[2]) for r, st in zip(_phase_rows(2), STATIONS)]
+    moved = [dict(r, lat=r["lat"] + 0.5, lon=r["lon"] + 0.5) for r in at_station]
+    for rows, ts in zip((at_station, moved), TWO_MINUTES):
+        flights_client, weather_client = _clients_at(states_payload(rows), ts)
+        ingest.extract_flights(spark, cat, flights_client, ts=ts)
+    ingest.extract_weather(spark, cat, weather_client, ts=TWO_MINUTES[0])
+    format_weather_stage(spark, cat, ts=TWO_MINUTES[0])
+
+    usage_dir = str(tmp_path / "usage")
+    _drain(run_flights_stream(spark, cat, usage_dir, str(tmp_path / "ckpt"), available_now=True))
+    want = {str(r["flight_id"]): (r["lat"], r["lon"]) for r in moved}
+    layer = cat.read_latest(spark, "usage", "skysafe", "flights")
+    for usage in (spark.read.parquet(usage_dir), layer):
+        got = {r["icao24"]: (r["latitude"], r["longitude"]) for r in usage.collect()}
+        assert got == want
+
+
+def test_stream_uses_weather_written_after_it_started(spark, tmp_path):
+    """A running flights stream combines each minute with the latest
+    formatted weather at that minute, including weather formatted after
+    the query started."""
+    from skysafe_datalake_spark.streaming.driver import run_flights_stream
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    windy = [st[:4] + (st[4] + 50.0,) + st[5:] for st in STATIONS]
+    doc = states_payload(_phase_rows(3))
+    usage_dir = str(tmp_path / "usage")
+    q = None
+    gusts = []
+    try:
+        for ts, stations in zip(TWO_MINUTES, (STATIONS, windy)):
+            flights_client, weather_client = _clients_at(doc, ts, stations)
+            ingest.extract_weather(spark, cat, weather_client, ts=ts)
+            format_weather_stage(spark, cat, ts=ts)
+            ingest.extract_flights(spark, cat, flights_client, ts=ts)
+            if q is None:
+                q = run_flights_stream(
+                    spark, cat, usage_dir, str(tmp_path / "ckpt"), trigger_seconds=None
+                )
+            q.processAllAvailable()
+            usage = spark.read.parquet(usage_dir).orderBy("icao24")
+            gusts.append([r["wind_gusts_10m"] for r in usage.collect()])
+    finally:
+        if q is not None:
+            q.stop()
+    assert len(gusts[0]) == 3
+    assert gusts[1] == [g + 50.0 for g in gusts[0]]
+
+
+def test_stream_fails_a_snapshot_without_extracted_at(spark, tmp_path):
+    """A snapshot with no ``_extracted_at`` has no minute to run as:
+    its micro-batch fails the query instead of being skipped."""
+    from pyspark.errors import StreamingQueryException
+
+    from skysafe_datalake_spark.streaming.driver import run_flights_stream
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    ingest.write_raw_payloads(
+        spark, cat, [states_payload(_phase_rows(2))], "opensky", "flights", ts=FIXTURE_TS
+    )
+    q = run_flights_stream(
+        spark, cat, str(tmp_path / "usage"), str(tmp_path / "ckpt"), available_now=True
+    )
+    try:
+        with pytest.raises(StreamingQueryException, match="without _extracted_at"):
+            q.awaitTermination(300)
+    finally:
+        q.stop()
+
+
+def test_repeated_icao24_yields_one_enriched_and_one_usage_row(spark, tmp_path):
+    """A snapshot that lists an aircraft twice still yields one enriched
+    and one usage row for it: the NN join's argmin groups by icao24, so
+    the minute needs no latest-per-key pass of its own."""
+    rows = _phase_rows(6)
+    rows.append(dict(rows[0], lat=rows[0]["lat"] + 1.0, velocity=rows[0]["velocity"] + 5))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    run_batch_pipeline(spark, cat, *fixture_clients(states_payload(rows)), ts=FIXTURE_TS)
+    assert cat.read_latest(spark, "formatted", "opensky", "flights").count() == 7
+    for layer in (("enriched", "skysafe", "flights"), ("usage", "skysafe", "flights")):
+        keys = [r["icao24"] for r in cat.read_latest(spark, *layer).collect()]
+        assert sorted(keys) == ["1", "2", "3", "4", "5", "6"], layer
 
 
 def test_two_aircraft_minute(spark, tmp_path):
@@ -406,50 +517,54 @@ def test_minute_rerun_after_crash_matches_clean_run(spark, tmp_path, monkeypatch
 
 def _jobs_in_group(spark, group, fn):
     """``fn()`` under its own Spark job group, and the number of jobs
-    it started, by Spark's status tracker."""
+    it started, by Spark's status tracker. The caller's group is put
+    back afterwards, so groups nest."""
     sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         out = fn()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.jobGroup.id", outer)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_minute_job_budget(spark, tmp_path):
+def test_minute_job_budget(spark, tmp_path, monkeypatch):
     """A perf gate host noise cannot move: each stage of one fixture
     minute, run in its own job group, starts no more Spark jobs than
-    its budget. Extract writes files, not Spark jobs, and no layer
-    read-back starts a schema-inference job."""
+    its budget, and the minute as a whole no more than 8. Extract
+    writes files, not Spark jobs, no layer read-back starts a
+    schema-inference job, and each stage hands its frame to the next."""
     from skysafe_datalake_spark.plans import pipeline as plans_pipeline
 
-    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
-    cat = LakeCatalog(str(tmp_path / "lake"))
-    ts = FIXTURE_TS
-    stages = {
-        "extract_flights": (
-            0, lambda: ingest.extract_flights(spark, cat, flights_client, ts=ts)
-        ),
-        "extract_weather": (
-            0, lambda: ingest.extract_weather(spark, cat, weather_client, ts=ts)
-        ),
-        "format_flights": (
-            1, lambda: plans_pipeline.format_flights_stage(spark, cat, ts=ts)
-        ),
-        "format_weather": (
-            1, lambda: plans_pipeline.format_weather_stage(spark, cat, ts=ts)
-        ),
-        "combine": (5, lambda: plans_pipeline.combine_stage(spark, cat, ts=ts)),
-        "usage": (2, lambda: plans_pipeline.usage_stage(spark, cat, ts=ts)),
+    budgets = {
+        (ingest, "extract_flights"): 0,
+        (ingest, "extract_weather"): 0,
+        (plans_pipeline, "format_flights_stage"): 1,
+        (plans_pipeline, "format_weather_stage"): 1,
+        (plans_pipeline, "combine_stage"): 5,
+        (plans_pipeline, "usage_stage"): 1,
     }
     jobs = {}
-    for name, (_budget, fn) in stages.items():
-        out, jobs[name] = _jobs_in_group(spark, f"test-minute-job-budget-{name}", fn)
-        if name == "combine":
-            assert out[1].used_kmeans
-    assert all(jobs[name] <= budget for name, (budget, _fn) in stages.items()), jobs
-    assert sum(jobs.values()) <= 9, jobs
+    for owner, name in budgets:
+        def grouped(*args, _fn=getattr(owner, name), _name=name, **kwargs):
+            group = f"test-minute-job-budget-{_name}"
+            out, jobs[_name] = _jobs_in_group(spark, group, lambda: _fn(*args, **kwargs))
+            return out
+
+        monkeypatch.setattr(owner, name, grouped)
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    result, elsewhere = _jobs_in_group(
+        spark,
+        "test-minute-job-budget",
+        lambda: run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS),
+    )
+    monkeypatch.undo()
+    assert result.model_info.used_kmeans
+    assert all(jobs[name] <= budget for (_o, name), budget in budgets.items()), jobs
+    assert sum(jobs.values()) + elsewhere <= 8, (jobs, elsewhere)
     assert cat.read_latest(spark, "usage", "skysafe", "flights").count() == 300
 
 
@@ -556,16 +671,12 @@ def test_flights_stream_sees_every_minute_of_an_hour(spark, tmp_path):
     source, which remembers the paths it has read."""
     from datetime import timedelta
 
-    from skysafe_datalake_spark.plans.pipeline import format_weather_stage
     from skysafe_datalake_spark.streaming.driver import run_flights_stream
 
     cat = LakeCatalog(str(tmp_path / "lake"))
     _, weather_client = fixture_clients(states_payload([]))
     ingest.extract_weather(spark, cat, weather_client, ts=FIXTURE_TS)
     format_weather_stage(spark, cat, ts=FIXTURE_TS)
-    weather = cat.read_latest(spark, "formatted", "open_meteo", "weather").drop(
-        "date", "hour"
-    )
     usage_dir = str(tmp_path / "usage")
     seen = []
     for minute, n in ((0, 3), (1, 5)):
@@ -573,12 +684,7 @@ def test_flights_stream_sees_every_minute_of_an_hour(spark, tmp_path):
         ts = FIXTURE_TS + timedelta(minutes=minute)
         ingest.extract_flights(spark, cat, flights_client, ts=ts)
         q = run_flights_stream(
-            spark,
-            cat.path("raw", "opensky", "flights"),
-            weather,
-            usage_dir,
-            str(tmp_path / "ckpt"),
-            available_now=True,
+            spark, cat, usage_dir, str(tmp_path / "ckpt"), available_now=True
         )
         try:
             assert q.awaitTermination(300), "stream did not drain its backlog"
@@ -828,13 +934,11 @@ def test_run_flights_stream_none_trigger_means_default(spark, tmp_path, monkeypa
 
     # An EMPTY raw dir: no micro-batch ever fires, so only the trigger
     # construction (the thing under test) is exercised.
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    weather = spark.createDataFrame([], "station_id long")
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    os.makedirs(cat.path("raw", "opensky", "flights"))
     q = sdriver.run_flights_stream(
         spark,
-        str(raw),
-        weather,
+        cat,
         str(tmp_path / "usage"),
         str(tmp_path / "ckpt"),
         trigger_seconds=None,  # used to build trigger('None seconds')
@@ -1060,6 +1164,32 @@ def test_read_latest_discovers_from_listing(spark, tmp_path):
     rows = cat.read_latest(spark, "formatted", "api", "lst").collect()
     assert [r["tag"] for r in rows] == ["new"]
     assert cat._latest_partition("formatted", "api", "missing") is None
+
+
+def test_read_latest_loads_one_partition_of_a_long_history(spark, tmp_path):
+    """With 40 daily partitions, past the 32 paths at which Spark lists
+    with a job, the writing catalog's read_latest still starts no job:
+    it loads only the latest partition's directory, and date/hour keep
+    their discovered types."""
+    from datetime import date
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    layer = ("formatted", "api", "daily")
+    older = [
+        ((FIXTURE_TS - timedelta(days=d)).strftime("%Y-%m-%d"), "14", -d)
+        for d in range(39, 0, -1)
+    ]
+    spark.createDataFrame(older, "date string, hour string, day int").write.partitionBy(
+        "date", "hour"
+    ).parquet(cat.path(*layer))
+    cat.write(spark.createDataFrame([(0,)], "day int"), *layer, ts=FIXTURE_TS)
+    assert sum(n.startswith("date=") for n in os.listdir(cat.path(*layer))) == 40
+
+    latest, jobs = _jobs_in_group(
+        spark, "test-read-latest-history", lambda: cat.read_latest(spark, *layer)
+    )
+    assert jobs == 0
+    assert [tuple(r) for r in latest.collect()] == [(0, date(2026, 2, 26), 14)]
 
 
 def test_urllib_transport_maps_connection_errors_to_httperror():
