@@ -15,14 +15,14 @@ formatted weather is read back.
 
 Scale notes: extract runs no Spark job (``LakeCatalog.write_file``).
 Formatting is one shuffle-free plan. Reads infer no schema: raw JSON
-has a fixed schema, formatted weather the one the catalog recorded
-when it wrote it. Combine's only exchange is the NN join's argmin,
-which leaves one row per ``icao24``; the ML stage checkpoints its
-input once and fits on the driver (``ml.phase_kmeans``), and the
-usage write reads that checkpoint. Each layer write replaces one
-partition (idempotent minute re-runs) with one file. ``with_counts``
-adds full-scan row counts, telemetry only (the reference counts
-unconditionally, §4 anti-pattern).
+has a fixed schema, and formatted weather is read with the schema of
+``openmeteo.format_weather``'s output. Combine's only exchange is the
+NN join's argmin, which leaves one row per ``icao24``; the ML stage
+checkpoints its input once and fits on the driver
+(``ml.phase_kmeans``), and the usage write reads that checkpoint. Each
+layer write replaces one partition (idempotent minute re-runs) with
+one file. ``with_counts`` adds full-scan row counts, telemetry only
+(the reference counts unconditionally, §4 anti-pattern).
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from skysafe_datalake_spark.catalog import LakeCatalog
 from skysafe_datalake_spark.ml.phase_kmeans import PhaseModelInfo
@@ -90,6 +91,12 @@ def format_weather_stage(
     return catalog.write(weather, "formatted", "open_meteo", "weather", ts=ts)
 
 
+def formatted_weather_schema(spark: SparkSession) -> StructType:
+    """The schema ``format_weather_stage`` writes, derived from
+    ``openmeteo.format_weather`` without a Spark job."""
+    return openmeteo.format_weather(spark.createDataFrame([], openmeteo.RAW_SCHEMA)).schema
+
+
 def combine_stage(
     catalog: LakeCatalog,
     flights: DataFrame,
@@ -130,7 +137,9 @@ def run_minute(
     fmt, flights = _staged(
         times, "format_flights", format_flights_stage, catalog, raw_flights, ts=ts
     )
-    weather = catalog.read_latest(spark, "formatted", "open_meteo", "weather")
+    weather = catalog.read_latest(
+        spark, "formatted", "open_meteo", "weather", schema=formatted_weather_schema(spark)
+    )
     enr, enriched, info = _staged(
         times, "combine", combine_stage,
         catalog, flights, weather.drop("date", "hour"), ts=ts,

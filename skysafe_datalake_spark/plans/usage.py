@@ -18,10 +18,10 @@ is on the classpath; parquet is the serving sink otherwise.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from skysafe_datalake_spark.catalog import hadoop_ls
 
 # usage projection: flight + unprefixed weather + derived cols
 # (reference src/index_elastic.py:88-123; FIXTURES.md §5).
@@ -131,9 +131,7 @@ def upsert_partitioned(
     bucketed = batch.withColumn(
         "kb", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
     )
-    exists = os.path.isdir(table_dir) and any(
-        not f.startswith((".", "_")) for f in os.listdir(table_dir)
-    )
+    exists = any(not n.startswith((".", "_")) for n, _d in hadoop_ls(spark, table_dir))
     if exists:
         touched = [r["kb"] for r in bucketed.select("kb").distinct().collect()]
         existing = spark.read.parquet(table_dir).where(F.col("kb").isin(touched))

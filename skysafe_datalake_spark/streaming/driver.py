@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from skysafe_datalake_spark.catalog import LakeCatalog
+from skysafe_datalake_spark.catalog import LakeCatalog, _hadoop_fs
 from skysafe_datalake_spark.plans.pipeline import run_minute
 from skysafe_datalake_spark.plans.usage import upsert_partitioned
 from skysafe_datalake_spark.sources import opensky
@@ -50,12 +50,17 @@ def run_flights_stream(
     (:func:`~skysafe_datalake_spark.plans.usage.upsert_partitioned`),
     once per trigger (the reference's 1-minute cadence).
     ``available_now=True`` processes the current backlog and stops.
-    A snapshot without ``_extracted_at`` fails its micro-batch.
+    A snapshot without ``_extracted_at`` fails its micro-batch. The
+    raw flights directory is created if missing, so the stream can
+    start before the first extract.
     """
+    raw_dir = catalog.path("raw", "opensky", "flights")
+    fs, jpath = _hadoop_fs(spark, raw_dir)
+    fs.mkdirs(jpath)
     raw_stream = (
         spark.readStream.schema(opensky.RAW_SCHEMA)
         .option("maxFilesPerTrigger", 96)
-        .json(catalog.path("raw", "opensky", "flights"))
+        .json(raw_dir)
     )
 
     def process_batch(raw_batch: DataFrame, batch_id: int) -> None:

@@ -292,10 +292,9 @@ def test_catalog_partitioned_write_read_latest(spark, tmp_path):
 def test_read_latest_uri_schemed_root_lists_via_hadoop_fs(spark, tmp_path):
     """ADVICE r9: a file:// (or s3a://) lake root is writable by Spark
     but invisible to os.listdir — read_latest previously returned ALL
-    partitions silently. Discovery now goes through the Hadoop
-    FileSystem client (the reference's ListObjectsV2 walk, Spark-side)
-    so it stays listing-only on any URI scheme; compaction shares the
-    same listing."""
+    partitions silently. Discovery goes through the Hadoop FileSystem
+    client (the reference's ListObjectsV2 walk, Spark-side), so it
+    stays listing-only on any URI scheme."""
     from datetime import datetime, timezone
 
     cat = LakeCatalog("file://" + str(tmp_path / "lake"))
@@ -304,50 +303,32 @@ def test_read_latest_uri_schemed_root_lists_via_hadoop_fs(spark, tmp_path):
               ts=datetime(2026, 2, 26, 13, 0, tzinfo=timezone.utc))
     cat.write(df.withColumn("x", F.col("x") + 100), "formatted", "opensky",
               "flights", ts=datetime(2026, 2, 26, 14, 0, tzinfo=timezone.utc))
-    # without a session the URI root can't be listed at all
-    assert cat._latest_partition("formatted", "opensky", "flights") is None
-    # with one, the Hadoop client resolves the newest partition
     assert cat._latest_partition(
-        "formatted", "opensky", "flights", spark
+        spark, "formatted", "opensky", "flights"
     ) == ("2026-02-26", "14")
     latest = cat.read_latest(spark, "formatted", "opensky", "flights")
     assert sorted(r["x"] for r in latest.collect()) == [100, 101, 102, 103, 104]
-    # compact() discovery works on the URI root too: split one
-    # partition into many files, compact folds them back to 1
-    many = df.repartition(4)
-    many_path = cat.write(
-        many, "formatted", "opensky", "flights_many",
-        ts=datetime(2026, 2, 26, 15, 0, tzinfo=timezone.utc),
-    )
-    assert many_path.startswith("file://")
-    result = cat.compact(spark, "formatted", "opensky", "flights_many")
-    # empty partitions write no file, so 'before' is 3-4 depending on
-    # the round-robin split; the contract is many -> 1
-    (before, after), = result.values()
-    assert list(result) == ["date=2026-02-26/hour=15"]
-    assert before >= 2 and after == 1
-    back = cat.read_latest(spark, "formatted", "opensky", "flights_many")
-    assert sorted(r["x"] for r in back.collect()) == [0, 1, 2, 3, 4]
 
 
-def test_read_latest_falls_back_to_distinct_when_listing_fails(
-    spark, tmp_path, monkeypatch
-):
-    """If the listing itself fails (unsupported scheme, gateway
-    hiccup), read_latest must still return ONLY the latest partition
-    via the Spark-side distinct() fallback — never silently skip the
-    filter."""
+def test_read_latest_raises_when_listing_fails(spark, tmp_path, monkeypatch):
+    """A listing that fails (unsupported scheme, gateway hiccup) fails
+    read_latest instead of being read as an empty or unfiltered
+    layer."""
     from datetime import datetime, timezone
+
+    from skysafe_datalake_spark import catalog as catalog_mod
 
     cat = LakeCatalog(str(tmp_path / "lake"))
     df = spark.range(5).withColumnRenamed("id", "x")
     cat.write(df, "formatted", "opensky", "flights",
               ts=datetime(2026, 2, 26, 13, 0, tzinfo=timezone.utc))
-    cat.write(df.withColumn("x", F.col("x") + 100), "formatted", "opensky",
-              "flights", ts=datetime(2026, 2, 26, 14, 0, tzinfo=timezone.utc))
-    monkeypatch.setattr(LakeCatalog, "_ls", lambda self, path, spark=None: None)
-    latest = cat.read_latest(spark, "formatted", "opensky", "flights")
-    assert sorted(r["x"] for r in latest.collect()) == [100, 101, 102, 103, 104]
+
+    def unreachable(spark_, path):
+        raise OSError(f"cannot reach {path}")
+
+    monkeypatch.setattr(catalog_mod, "_hadoop_fs", unreachable)
+    with pytest.raises(OSError, match="cannot reach"):
+        cat.read_latest(spark, "formatted", "opensky", "flights")
 
 
 def test_latest_partition_skips_foreign_and_empty_hour_dirs(spark, tmp_path):
@@ -370,7 +351,7 @@ def test_latest_partition_skips_foreign_and_empty_hour_dirs(spark, tmp_path):
     os.makedirs(os.path.join(date_dir, "hour=23"))  # in-flight: no files
     os.makedirs(os.path.join(date_dir, "hour=22"))
     open(os.path.join(date_dir, "hour=22", "_SUCCESS"), "w").close()
-    assert cat._latest_partition("formatted", "opensky", "flights") == (
+    assert cat._latest_partition(spark, "formatted", "opensky", "flights") == (
         "2026-02-26",
         "13",
     )

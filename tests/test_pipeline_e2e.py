@@ -396,6 +396,26 @@ def test_stream_uses_weather_written_after_it_started(spark, tmp_path):
     assert gusts[1] == [g + 50.0 for g in gusts[0]]
 
 
+def test_stream_starts_before_the_first_extract(spark, tmp_path):
+    """A flights stream started on an empty catalog drains with no
+    batch, then picks up a minute extracted afterwards."""
+    from skysafe_datalake_spark.streaming.driver import run_flights_stream
+
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    usage_dir, ckpt = str(tmp_path / "usage"), str(tmp_path / "ckpt")
+    q = run_flights_stream(spark, cat, usage_dir, ckpt, available_now=True)
+    _drain(q)
+    assert not [p for p in q.recentProgress if p["numInputRows"]]
+
+    flights_client, weather_client = fixture_clients(states_payload(_phase_rows(3)))
+    ingest.extract_weather(spark, cat, weather_client, ts=FIXTURE_TS)
+    format_weather_stage(spark, cat, ts=FIXTURE_TS)
+    ingest.extract_flights(spark, cat, flights_client, ts=FIXTURE_TS)
+    _drain(run_flights_stream(spark, cat, usage_dir, ckpt, available_now=True))
+    usage = spark.read.parquet(usage_dir)
+    assert sorted(r["icao24"] for r in usage.collect()) == ["1", "2", "3"]
+
+
 def test_stream_fails_a_snapshot_without_extracted_at(spark, tmp_path):
     """A snapshot with no ``_extracted_at`` has no minute to run as:
     its micro-batch fails the query instead of being skipped."""
@@ -603,16 +623,19 @@ def _layer_files(cat, layer, ts):
 
 
 def test_zero_row_write_replaces_the_partition(spark, tmp_path):
-    """Writing 0 rows over a minute's 2 rows leaves that partition one
-    0-row file with the frame's schema: read_latest returns 0 rows, not
-    the 2 old ones."""
+    """Writing 0 rows over a minute's 2 rows, in one Spark job, leaves
+    that partition one 0-row file with the frame's schema: read_latest
+    returns 0 rows, not the 2 old ones."""
     cat = LakeCatalog(str(tmp_path / "lake"))
     layer = ("formatted", "opensky", "flights")
     df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "icao24 string, lat double")
     cat.write(df, *layer, ts=FIXTURE_TS)
     assert cat.read_latest(spark, *layer).count() == 2
 
-    cat.write(df.limit(0), *layer, ts=FIXTURE_TS)
+    _, jobs = _jobs_in_group(
+        spark, "test-zero-row-write", lambda: cat.write(df.limit(0), *layer, ts=FIXTURE_TS)
+    )
+    assert jobs == 1
     latest = cat.read_latest(spark, *layer)
     assert latest.count() == 0
     assert latest.columns == ["icao24", "lat", "date", "hour"]
@@ -634,7 +657,7 @@ def test_zero_row_write_makes_a_new_hour_the_latest(spark, tmp_path):
     assert len(_layer_files(cat, layer, later)) == 1
     latest = cat.read_latest(spark, *layer)
     assert latest.count() == 0
-    # A fresh catalog (no recorded schema) reads the empty file's schema.
+    # A second catalog on the same root reads the empty file's schema.
     fresh = LakeCatalog(str(tmp_path / "lake")).read_latest(spark, *layer)
     assert fresh.count() == 0 and fresh.columns[:2] == ["station_id", "temp"]
 
@@ -696,9 +719,9 @@ def test_flights_stream_sees_every_minute_of_an_hour(spark, tmp_path):
 
 
 def test_raw_write_is_atomic_and_leaves_nothing_behind(spark, tmp_path, monkeypatch):
-    """A raw write whose final rename fails leaves only a hidden temp
-    file; re-running the same minute leaves exactly one data file with
-    the second run's documents and no temp."""
+    """A raw write whose final rename fails leaves only a hidden stage;
+    re-running the same minute leaves exactly one data file with the
+    second run's documents and no stage."""
     from skysafe_datalake_spark import catalog as catalog_mod
 
     real_hadoop_fs = catalog_mod._hadoop_fs
@@ -738,6 +761,34 @@ def test_raw_write_is_atomic_and_leaves_nothing_behind(spark, tmp_path, monkeypa
     assert sorted(tuple(r)[:2] for r in back.collect()) == [(2, 0), (2, 1)]
 
 
+def test_failed_write_keeps_the_previous_rows(spark, tmp_path):
+    """A write whose Spark job fails leaves read_latest serving the
+    partition's previous rows, with only a hidden stage left behind.
+    The next write, of a frame whose first partition is empty, leaves
+    one data file and its checksum."""
+    cat = LakeCatalog(str(tmp_path / "lake"))
+    layer = ("formatted", "api", "docs")
+    df = spark.createDataFrame([(1,), (2,)], "x int")
+    cat.write(df, *layer, ts=FIXTURE_TS)
+    failing = df.withColumn(
+        "x", F.when(F.col("x") > 1, F.raise_error(F.lit("write failed"))).otherwise(F.col("x"))
+    )
+    with pytest.raises(Exception, match="write failed"):
+        cat.write(failing, *layer, ts=FIXTURE_TS)
+
+    date, hour = LakeCatalog.partition_values(FIXTURE_TS)
+    part = os.path.join(cat.path(*layer), f"date={date}", f"hour={hour}")
+    hidden = [n for n in os.listdir(part) if n.startswith(".") and not n.endswith(".crc")]
+    assert len(hidden) == 1 and hidden[0].startswith(".stage-"), hidden
+    assert sorted(r["x"] for r in cat.read_latest(spark, *layer).collect()) == [1, 2]
+
+    cat.write(df.where("x = 1"), *layer, ts=FIXTURE_TS)
+    names = sorted(os.listdir(part))
+    data = [n for n in names if not n.startswith(".")]
+    assert len(data) == 1 and names == [f".{data[0]}.crc", data[0]], names
+    assert [r["x"] for r in cat.read_latest(spark, *layer).collect()] == [1]
+
+
 def test_raw_round_trip_on_a_file_uri_root(spark, tmp_path):
     """The raw write goes through the Hadoop FileSystem client, so a
     file:// lake root takes the same path as s3a:// or hdfs://."""
@@ -759,39 +810,34 @@ def _fields(schema):
 
 
 def test_recorded_schema_reads_like_inference(spark, tmp_path):
-    """The writing catalog reads each Parquet layer back with the
-    schema it recorded, without a job; a fresh catalog on the same
-    root infers it. Both give the same schema, partition-column types
-    and rows."""
-    flights_client, weather_client = fixture_clients(states_payload(_phase_rows()))
+    """The formatted-weather schema ``run_minute`` reads with equals
+    the schema Spark infers from what ``format_weather_stage`` wrote,
+    and the read with it starts no job. Both reads give the same
+    partition-column types and rows."""
+    from skysafe_datalake_spark.plans.pipeline import formatted_weather_schema
+
+    _, weather_client = fixture_clients(states_payload([]))
     cat = LakeCatalog(str(tmp_path / "lake"))
-    run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
-    fresh = LakeCatalog(str(tmp_path / "lake"))
-    for layer in (
-        ("formatted", "opensky", "flights"),
-        ("formatted", "open_meteo", "weather"),
-        ("enriched", "skysafe", "flights"),
-        ("usage", "skysafe", "flights"),
-    ):
-        tag = "-".join(layer)
-        recorded, jobs = _jobs_in_group(
-            spark, f"test-recorded-{tag}", lambda: cat.read_latest(spark, *layer)
-        )
-        inferred = fresh.read_latest(spark, *layer)
-        assert jobs == 0, layer
-        assert _fields(recorded.schema) == _fields(inferred.schema), layer
-        assert [f.dataType.simpleString() for f in recorded.schema[-2:]] == [
-            "date",
-            "int",
-        ]
-        got = sorted(map(repr, recorded.collect()))
-        assert got and got == sorted(map(repr, inferred.collect())), layer
+    ingest.extract_weather(spark, cat, weather_client, ts=FIXTURE_TS)
+    format_weather_stage(spark, cat, ts=FIXTURE_TS)
+    layer = ("formatted", "open_meteo", "weather")
+    schema = formatted_weather_schema(spark)
+    named, jobs = _jobs_in_group(
+        spark, "test-recorded-weather", lambda: cat.read_latest(spark, *layer, schema=schema)
+    )
+    inferred = cat.read_latest(spark, *layer)
+    assert jobs == 0
+    assert _fields(schema) == _fields(inferred.drop("date", "hour").schema)
+    assert _fields(named.schema) == _fields(inferred.schema)
+    assert [f.dataType.simpleString() for f in named.schema[-2:]] == ["date", "int"]
+    got = sorted(map(repr, named.collect()))
+    assert got and got == sorted(map(repr, inferred.collect()))
 
 
 def test_read_latest_infers_when_another_writer_wrote_a_newer_hour(spark, tmp_path):
-    """A recorded schema is only used for the partition it was
-    recorded for: after a second catalog writes a newer hour with an
-    extra column, the first catalog reads that column."""
+    """Without a schema, read_latest infers the latest partition's:
+    after a second catalog writes a newer hour with an extra column,
+    the first catalog reads that column."""
     from datetime import datetime, timezone
 
     root = str(tmp_path / "lake")
@@ -861,6 +907,26 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     final = spark.read.parquet(table)
     assert final.count() == 20
     assert final.filter(F.col("icao24") == "k3").first()["v"] == 999
+
+
+def test_upsert_merges_into_a_file_uri_table(spark, tmp_path):
+    """On a file:// table the second batch merges into the first: the
+    upsert finds the existing table through the Hadoop FileSystem
+    client, so the touched bucket keeps its other keys."""
+    def batch(rows):
+        return spark.createDataFrame(rows, "icao24 string, ts_str string, v int").withColumn(
+            "extracted_at", F.to_timestamp("ts_str")
+        ).drop("ts_str")
+
+    table = "file://" + str(tmp_path / "usage")
+    upsert_partitioned(
+        batch([("a", "2026-01-01T00:00:00", 1), ("b", "2026-01-01T00:00:00", 2)]),
+        table,
+        n_buckets=1,
+    )
+    upsert_partitioned(batch([("a", "2026-01-01T00:01:00", 3)]), table, n_buckets=1)
+    got = sorted((r["icao24"], r["v"]) for r in spark.read.parquet(table).collect())
+    assert got == [("a", 3), ("b", 2)]
 
 
 def test_upsert_dedupes_within_first_batch(spark, tmp_path):
@@ -947,47 +1013,6 @@ def test_run_flights_stream_none_trigger_means_default(spark, tmp_path, monkeypa
         assert q.isActive  # started: the interval parse did not throw
     finally:
         q.stop()
-
-
-def test_catalog_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
-    """Small-file compaction: a fragmented partition collapses to the
-    file count its volume needs; already-compact partitions are left
-    byte-untouched (dynamic-overwrite swap, like the upsert sink)."""
-    from datetime import datetime, timezone
-
-    from skysafe_datalake_spark.catalog import LakeCatalog
-
-    cat = LakeCatalog(str(tmp_path / "lake"))
-    frag = spark.range(1000).repartition(8).withColumnRenamed("id", "x")
-    cat.write(frag, "formatted", "opensky", "flights",
-              ts=datetime(2026, 2, 26, 13, tzinfo=timezone.utc))
-    tidy = spark.range(1000, 2000).coalesce(1).withColumnRenamed("id", "x")
-    cat.write(tidy, "formatted", "opensky", "flights",
-              ts=datetime(2026, 2, 26, 14, tzinfo=timezone.utc))
-
-    root = cat.path("formatted", "opensky", "flights")
-
-    def files(hour):
-        d = os.path.join(root, "date=2026-02-26", f"hour={hour}")
-        return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    before13, before14 = files(13), files(14)
-    assert len(before13) == 8 and len(before14) == 1
-
-    result = cat.compact(spark, "formatted", "opensky", "flights")
-    assert result == {"date=2026-02-26/hour=13": (8, 1)}
-    assert len(files(13)) == 1
-    assert files(14) == before14  # untouched partition: same files, same mtime
-
-    # values intact across the whole entity
-    vals = sorted(
-        r["x"] for r in cat.read(spark, "formatted", "opensky", "flights").collect()
-    )
-    assert vals == list(range(2000))
 
 
 def test_round2_operators_handle_empty_inputs(spark, tmp_path):
@@ -1120,35 +1145,6 @@ def test_latest_per_key_null_ts_loses_and_subsecond_wins(spark):
     assert out["k2"] == "only-null"  # all-null key still emits its row
 
 
-def test_compact_preserves_zero_padded_hour_partitions(spark, tmp_path):
-    """Round-9 review, reproduced: partition inference read hour=08
-    back as int 8 and compaction rewrote into a NEW hour=8 dir while
-    dynamic overwrite never cleared hour=08 — the partition's rows
-    doubled on every compact() run."""
-    import os
-    from datetime import datetime, timezone
-
-    cat = LakeCatalog(str(tmp_path / "lake"))
-    ts = datetime(2026, 2, 26, 8, tzinfo=timezone.utc)  # zero-padded hour=08
-    df = spark.range(100).select(F.col("id").alias("v"))
-    # several small writes into the same partition -> many files
-    for chunk in (df.where("v < 50"), df.where("v >= 50")):
-        cat.write(
-            chunk.repartition(4), "formatted", "api", "pad", ts=ts
-        )
-    # dynamic overwrite per-write replaced the partition; write both
-    # halves in ONE write so all 100 rows coexist
-    cat.write(df.repartition(8), "formatted", "api", "pad", ts=ts)
-    root = cat.path("formatted", "api", "pad")
-    assert cat.compact(spark, "formatted", "api", "pad", min_files=2)
-    hours = sorted(
-        h for h in os.listdir(os.path.join(root, "date=2026-02-26"))
-        if h.startswith("hour=")
-    )
-    assert hours == ["hour=08"], hours  # no stray hour=8 twin
-    assert cat.read(spark, "formatted", "api", "pad").count() == 100
-
-
 def test_read_latest_discovers_from_listing(spark, tmp_path):
     """Latest-partition discovery is a directory listing (no data
     scan) and still picks the true max across padded/unpadded hours."""
@@ -1163,14 +1159,15 @@ def test_read_latest_discovers_from_listing(spark, tmp_path):
         )
     rows = cat.read_latest(spark, "formatted", "api", "lst").collect()
     assert [r["tag"] for r in rows] == ["new"]
-    assert cat._latest_partition("formatted", "api", "missing") is None
+    assert cat._latest_partition(spark, "formatted", "api", "missing") is None
 
 
 def test_read_latest_loads_one_partition_of_a_long_history(spark, tmp_path):
     """With 40 daily partitions, past the 32 paths at which Spark lists
-    with a job, the writing catalog's read_latest still starts no job:
+    with a job, read_latest still starts no job:
     it loads only the latest partition's directory, and date/hour keep
-    their discovered types."""
+    their discovered types. The read names its schema, so no footer
+    is read either."""
     from datetime import date
 
     cat = LakeCatalog(str(tmp_path / "lake"))
@@ -1186,7 +1183,9 @@ def test_read_latest_loads_one_partition_of_a_long_history(spark, tmp_path):
     assert sum(n.startswith("date=") for n in os.listdir(cat.path(*layer))) == 40
 
     latest, jobs = _jobs_in_group(
-        spark, "test-read-latest-history", lambda: cat.read_latest(spark, *layer)
+        spark,
+        "test-read-latest-history",
+        lambda: cat.read_latest(spark, *layer, schema="day int"),
     )
     assert jobs == 0
     assert [tuple(r) for r in latest.collect()] == [(0, date(2026, 2, 26), 14)]
