@@ -92,18 +92,15 @@ class LakeCatalog:
         entity: str,
         *,
         ts: datetime | None = None,
-        fmt: str = "parquet",
-        options: dict[str, str] | None = None,
     ) -> str:
-        """Replace ``ts``'s date/hour partition with one file of
+        """Replace ``ts``'s date/hour partition with one Parquet file of
         ``df``'s rows, in one Spark job: re-running a minute replaces
         only its partition. The frame is coalesced to one task because
         Spark's first task always writes a file, empty or not; so a
         0-row frame leaves one 0-row file of its schema."""
         part = self._partition(layer, source, entity, ts)
         stage = f".stage-{uuid.uuid4()}"
-        writer = df.drop("date", "hour").coalesce(1).write.format(fmt)
-        writer.options(**(options or {})).save(f"{part}/{stage}")
+        df.drop("date", "hour").coalesce(1).write.parquet(f"{part}/{stage}")
         _replace(df.sparkSession, part, stage)
         return self.path(layer, source, entity)
 
@@ -164,7 +161,6 @@ class LakeCatalog:
         entity: str,
         *,
         fmt: str = "parquet",
-        options: dict[str, str] | None = None,
         schema=None,
     ) -> DataFrame:
         """The latest date/hour partition that holds data (reference
@@ -179,7 +175,7 @@ class LakeCatalog:
         latest = self._latest_partition(spark, layer, source, entity)
         if latest is None:
             raise FileNotFoundError(f"no partition of {target} holds a data file")
-        reader = spark.read.format(fmt).options(**(options or {}))
+        reader = spark.read.format(fmt)
         if schema is not None:
             reader = reader.schema(schema)
         date, hour = latest

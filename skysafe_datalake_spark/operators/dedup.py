@@ -162,13 +162,6 @@ def _parse_size_bytes(s: str) -> int:
 _AUTO_SALT_GROUPS = 8
 _BANDED_ROW_BYTES = 48
 
-# Last auto-salt decision (diagnostic, same pattern as
-# analytics.LAST_PAGERANK_CHECKPOINT): lets the scale smoke and tests
-# prove the shuffle-path salt engages at the corpus sizes it exists
-# for — sf0.1 stays under the broadcast threshold, so only an
-# over-scale run can exercise it.
-LAST_SALT_DECISION: dict[str, object] = {}
-
 # Pair-emission runaway warning: the pairs path is output-bound on
 # duplicate-heavy corpora (the 64x smoke emitted 1.147B pairs in
 # ~19 min — by design there, silently elsewhere). Past this many
@@ -323,22 +316,12 @@ def minhash_lsh_pairs(
         threshold = _parse_size_bytes(raw)
         if aqe != "true" or threshold <= 0:
             salt_groups = _AUTO_SALT_GROUPS  # join shuffles: salt
-            LAST_SALT_DECISION.update(
-                salted=True, reason="no_runtime_broadcast", est_bytes=None
-            )
         else:
             est = signatures.count() * n_bands * _BANDED_ROW_BYTES
             salt_groups = _AUTO_SALT_GROUPS if est > threshold else None
-            # Decision record (scale_smoke evidence): auto-salting
-            # only engages above broadcastable corpus sizes, which
-            # sf0.1 never reaches — the 64x smoke log is the proof
-            # the shuffle-path salt actually fires at the scale it
-            # was built for.
-            LAST_SALT_DECISION.update(
-                salted=salt_groups is not None,
-                reason="est_vs_broadcast_threshold",
-                est_bytes=est,
-            )
+            # Auto-salting only engages above broadcastable corpus
+            # sizes, which sf0.1 never reaches; the stderr note makes
+            # the decision visible where it fires.
             if salt_groups is not None:
                 import sys
 

@@ -4,7 +4,7 @@ crossJoin + Haversine + row_number per key, keep rank 1).
 
 Spark-first re-expression with two physical strategies:
 
-``argmin`` (default for k=1)
+``argmin`` (k=1)
     broadcast cross join → per-row distance → ``groupBy(keys).agg(
     min(struct(order, payload)))``. The min over a struct runs as
     SortAggregate (struct buffers aren't hash-aggregatable), with a
@@ -13,10 +13,9 @@ Spark-first re-expression with two physical strategies:
     *before* the shuffle, so the exchange carries exactly one row per
     left row regardless of |right|. No window. Shuffle volume == |left|.
 
-``window`` (generic k ≥ 1)
+``window`` (k > 1)
     broadcast cross join → ``row_number() OVER (PARTITION BY keys
-    ORDER BY dist)`` → ``rank <= k``. Shuffles |left|·|right| rows;
-    use only for small inputs or k > 1.
+    ORDER BY dist)`` → ``rank <= k``. Shuffles |left|·|right| rows.
 
 For a right side too large to broadcast, pre-bucket both sides with
 :func:`skysafe_datalake_spark.functions.geo.grid_cell` and equi-join
@@ -76,11 +75,11 @@ def nearest_neighbor_join(
     distance_name: str = "dist_km",
     order_by: Column | None = None,
     tie_breakers: Sequence[str] = (),
-    broadcast_right: bool = True,
-    strategy: str = "auto",
     rank_name: str | None = None,
 ) -> DataFrame:
-    """Join each left row to its k nearest right rows.
+    """Join each left row to its k nearest right rows, through a
+    broadcast of ``right``: the argmin strategy when ``k == 1``, the
+    window strategy otherwise.
 
     Parameters
     ----------
@@ -96,16 +95,10 @@ def nearest_neighbor_join(
         and is emitted as a literal so downstream projections work
         identically under either strategy.
     """
-    right_in = F.broadcast(right) if broadcast_right else right
-    joined = left.crossJoin(right_in).withColumn(distance_name, distance)
+    joined = left.crossJoin(F.broadcast(right)).withColumn(distance_name, distance)
     rank_on = order_by if order_by is not None else F.col(distance_name)
 
-    if strategy == "auto":
-        strategy = "argmin" if k == 1 else "window"
-
-    if strategy == "argmin":
-        if k != 1:
-            raise ValueError("argmin strategy supports only k=1")
+    if k == 1:
         out = _argmin(joined, partition_by, rank_on, tie_breakers)
         if rank_name is not None:
             out = out.withColumn(rank_name, F.lit(1).cast("int"))

@@ -21,15 +21,15 @@ NN join's argmin, which leaves one row per ``icao24``; the ML stage
 checkpoints its input once and fits on the driver
 (``ml.phase_kmeans``), and the usage write reads that checkpoint. Each
 layer write replaces one partition (idempotent minute re-runs) with
-one file. ``with_counts`` adds full-scan row counts, telemetry only
-(the reference counts unconditionally, §4 anti-pattern).
+one file.
 """
 
 from __future__ import annotations
 
+import functools
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,23 +44,16 @@ from skysafe_datalake_spark.sources import ingest, openmeteo, opensky
 
 @dataclass
 class BatchRunResult:
-    """One minute's layer paths, model info and usage frame, from
+    """One minute's model info, usage frame and stage wall, from
     either path (``run_minute``)."""
 
-    raw_flights_path: str
-    raw_weather_path: str
-    formatted_flights_path: str
-    formatted_weather_path: str
-    enriched_path: str
-    usage_path: str
     model_info: PhaseModelInfo
-    counts: dict[str, int]
+    usage: DataFrame
     # Wall seconds per DAG stage (extract_flights, extract_weather,
-    # format_flights, format_weather, combine, usage [, counts]).
-    # The e2e pipeline is a composite — the only way to attribute a
+    # format_flights, format_weather, combine, usage). The e2e
+    # pipeline is a composite — the only way to attribute a
     # regression inside its single wall time is stage-level wall.
-    stage_seconds: dict[str, float] = field(default_factory=dict)
-    usage: DataFrame | None = None
+    stage_seconds: dict[str, float]
 
 
 def _staged(stage_seconds: dict[str, float], name: str, fn, *args, **kwargs):
@@ -72,28 +65,32 @@ def _staged(stage_seconds: dict[str, float], name: str, fn, *args, **kwargs):
 
 def format_flights_stage(
     catalog: LakeCatalog, raw: DataFrame, *, ts: datetime | None
-) -> tuple[str, DataFrame]:
+) -> DataFrame:
     """Raw snapshot JSON → typed flights table (reference
     ``src/format_flights.py:43-171``, task 'format_flights_spark')."""
     flights = opensky.format_flights(raw)
-    return catalog.write(flights, "formatted", "opensky", "flights", ts=ts), flights
+    catalog.write(flights, "formatted", "opensky", "flights", ts=ts)
+    return flights
 
 
 def format_weather_stage(
     spark: SparkSession, catalog: LakeCatalog, *, ts: datetime | None = None
-) -> str:
+) -> None:
     """Raw per-station JSON → typed weather table (reference
     ``src/format_weather.py:6-60``, task 'format_weather_spark')."""
     raw = catalog.read_latest(
         spark, "raw", "open_meteo", "weather", fmt="json", schema=openmeteo.RAW_SCHEMA
     )
     weather = openmeteo.format_weather(raw.drop("date", "hour"))
-    return catalog.write(weather, "formatted", "open_meteo", "weather", ts=ts)
+    catalog.write(weather, "formatted", "open_meteo", "weather", ts=ts)
 
 
+@functools.cache
 def formatted_weather_schema(spark: SparkSession) -> StructType:
     """The schema ``format_weather_stage`` writes, derived from
-    ``openmeteo.format_weather`` without a Spark job."""
+    ``openmeteo.format_weather`` without a Spark job, once per session:
+    the derivation costs ~0.1 s of driver work and its result never
+    changes."""
     return openmeteo.format_weather(spark.createDataFrame([], openmeteo.RAW_SCHEMA)).schema
 
 
@@ -103,22 +100,23 @@ def combine_stage(
     weather: DataFrame,
     *,
     ts: datetime | None,
-) -> tuple[str, DataFrame, PhaseModelInfo]:
+) -> tuple[DataFrame, PhaseModelInfo]:
     """Formatted flights × weather → enriched layer (reference
     ``src/combine_spark.py:60-400``, task 'combine_data_spark')."""
     enriched, info = combine_enrich(flights, weather)
-    path = catalog.write(enriched, "enriched", "skysafe", "flights", ts=ts)
-    return path, enriched, info
+    catalog.write(enriched, "enriched", "skysafe", "flights", ts=ts)
+    return enriched, info
 
 
 def usage_stage(
     catalog: LakeCatalog, enriched: DataFrame, *, ts: datetime | None
-) -> tuple[str, DataFrame]:
+) -> DataFrame:
     """Enriched → usage (serving) layer: wide projection + geo struct
     (reference ``src/index_elastic.py:88-158``, task 'index_to_elastic'
     minus the ES HTTP hop)."""
     usage = build_usage(enriched)
-    return catalog.write(usage, "usage", "skysafe", "flights", ts=ts), usage
+    catalog.write(usage, "usage", "skysafe", "flights", ts=ts)
+    return usage
 
 
 def run_minute(
@@ -134,29 +132,18 @@ def run_minute(
     layers for ``ts``. Stages are looked up by module attribute at
     call time, so a caller can wrap them by name."""
     times: dict[str, float] = {}
-    fmt, flights = _staged(
+    flights = _staged(
         times, "format_flights", format_flights_stage, catalog, raw_flights, ts=ts
     )
     weather = catalog.read_latest(
         spark, "formatted", "open_meteo", "weather", schema=formatted_weather_schema(spark)
     )
-    enr, enriched, info = _staged(
+    enriched, info = _staged(
         times, "combine", combine_stage,
         catalog, flights, weather.drop("date", "hour"), ts=ts,
     )
-    usage_path, usage = _staged(times, "usage", usage_stage, catalog, enriched, ts=ts)
-    return BatchRunResult(
-        raw_flights_path=catalog.path("raw", "opensky", "flights"),
-        raw_weather_path=catalog.path("raw", "open_meteo", "weather"),
-        formatted_flights_path=fmt,
-        formatted_weather_path=catalog.path("formatted", "open_meteo", "weather"),
-        enriched_path=enr,
-        usage_path=usage_path,
-        model_info=info,
-        counts={},
-        stage_seconds=times,
-        usage=usage,
-    )
+    usage = _staged(times, "usage", usage_stage, catalog, enriched, ts=ts)
+    return BatchRunResult(model_info=info, usage=usage, stage_seconds=times)
 
 
 def run_batch_pipeline(
@@ -166,8 +153,6 @@ def run_batch_pipeline(
     weather_client: ingest.OpenMeteoClient,
     *,
     ts: datetime | None = None,
-    weather_points=None,
-    with_counts: bool = False,
 ) -> BatchRunResult:
     """One minute-cadence run of the full DAG, all four layers.
 
@@ -177,13 +162,20 @@ def run_batch_pipeline(
     from a 2-thread pool; then ``run_minute`` runs on the raw flights
     partition. Stage timers run inside their thread, so each stage
     records its own true wall, but the two legs' stage_seconds can
-    OVERLAP and their sum may exceed the pipeline wall."""
+    OVERLAP and their sum may exceed the pipeline wall.
+
+    Keep the pool even though the legs are short: with the same stages
+    called one after another, 14 alternating ``perfbench`` ``minute_dag``
+    pairs (``local[4]``) read higher on both metrics of record —
+    ``unit_cpu_s`` median 10.36 → 11.71 s (12 of 14 pairs) and
+    ``setup_s`` 20.27 → 22.61 s (13 of 14). Why sequential calls cost
+    more CPU is not established."""
     times: dict[str, float] = {}
 
     def _weather_leg() -> None:
         _staged(
             times, "extract_weather", ingest.extract_weather,
-            spark, catalog, weather_client, points=weather_points, ts=ts,
+            spark, catalog, weather_client, ts=ts,
         )
         _staged(times, "format_weather", format_weather_stage, spark, catalog, ts=ts)
 
@@ -203,25 +195,4 @@ def run_batch_pipeline(
     )
     result = run_minute(spark, catalog, raw, ts=ts)
     result.stage_seconds = {**times, **result.stage_seconds}
-    if with_counts:
-        t0 = time.perf_counter()
-        for name, (layer, source, entity) in {
-            "formatted_flights": ("formatted", "opensky", "flights"),
-            "formatted_weather": ("formatted", "open_meteo", "weather"),
-            "enriched": ("enriched", "skysafe", "flights"),
-            "usage": ("usage", "skysafe", "flights"),
-        }.items():
-            result.counts[name] = catalog.read_latest(spark, layer, source, entity).count()
-        result.stage_seconds["counts"] = round(time.perf_counter() - t0, 3)
-    # Module-level copy of the LAST run's stage wall: scale_smoke.py
-    # reads it to attach stage-level attribution to the e2e row
-    # without threading the result object through the registry's
-    # (spark, sf_dir) -> DataFrame query signature.
-    global LAST_STAGE_SECONDS
-    LAST_STAGE_SECONDS = dict(result.stage_seconds)
     return result
-
-
-# Stage wall seconds of the most recent run_batch_pipeline call in
-# this process (telemetry for scale_smoke; see run_batch_pipeline).
-LAST_STAGE_SECONDS: dict[str, float] = {}

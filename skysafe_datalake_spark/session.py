@@ -79,7 +79,6 @@ def get_spark(
     app_name: str = "skysafe-datalake-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
@@ -99,8 +98,6 @@ def get_spark(
     else:
         # Local default: one per core is plenty; AQE coalesces further.
         conf.setdefault("spark.sql.shuffle.partitions", "32")
-    if extra_conf:
-        conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -63,7 +63,7 @@ WEATHER_VARIABLES = (
 )
 
 # The 6 fixed French stations (reference src/extract_weather.py:42-49).
-DEFAULT_WEATHER_POINTS: tuple[dict, ...] = (
+WEATHER_POINTS: tuple[dict, ...] = (
     {"latitude": 48.709632, "longitude": 2.208563},   # Paris CDG
     {"latitude": 43.629421, "longitude": 1.367789},   # Toulouse
     {"latitude": 45.726009, "longitude": 5.090928},   # Lyon
@@ -228,9 +228,9 @@ class OpenMeteoClient:
         payload["_extracted_at"] = self.clock().isoformat()
         return payload
 
-    def fetch_all(self, points: Sequence[dict] | None = None) -> list[dict]:
+    def fetch_all(self) -> list[dict]:
         results = []
-        for point in points or DEFAULT_WEATHER_POINTS:
+        for point in WEATHER_POINTS:
             lat, lon = point["latitude"], point["longitude"]
             try:
                 results.append(self.fetch_point(lat, lon))
@@ -279,13 +279,12 @@ def extract_weather(
     catalog: LakeCatalog,
     client: OpenMeteoClient,
     *,
-    points: Sequence[dict] | None = None,
     ts: datetime | None = None,
 ) -> str:
     """DAG task 'extract_weather_api' (reference
     dags/sky_safe_dag.py:45-50 → extract_weather.py:71-92). One JSON
     line per station document."""
-    payloads = client.fetch_all(points)
+    payloads = client.fetch_all()
     return write_raw_payloads(
         spark, catalog, payloads, "open_meteo", "weather", ts=ts
     )

@@ -43,7 +43,6 @@ def run_flights_stream(
     *,
     trigger_seconds: int | None = 60,
     available_now: bool = False,
-    n_buckets: int = 64,
 ) -> StreamingQuery:
     """Raw OpenSky snapshots in ``catalog`` → its formatted, enriched
     and usage layers, plus the keyed-upsert table at ``usage_dir``
@@ -70,7 +69,7 @@ def run_flights_stream(
         for stamp in sorted(stamps, key=datetime.fromisoformat):
             snapshot = raw_batch.where(F.col("_extracted_at") == stamp)
             minute = run_minute(spark, catalog, snapshot, ts=datetime.fromisoformat(stamp))
-            upsert_partitioned(minute.usage, usage_dir, n_buckets=n_buckets)
+            upsert_partitioned(minute.usage, usage_dir)
 
     writer = raw_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -1076,7 +1076,7 @@ def recursive_cte_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq.createOrReplaceTempView("rcte_seq")
     # The walk emits ≤ 12·|customers| rows; Spark's recursion safety
     # valve defaults to 1M TOTAL rows and kills the query at ~8×
-    # bench scale (found by scale_smoke). Size it to the work:
+    # bench scale. Size it to the work:
     # emitted rows are bounded by |seq| (≤ one row per order), so
     # |seq| plus slack is the principled limit.
     n_seq = seq.count()

@@ -569,13 +569,6 @@ _PR_SQL = (
 )
 
 
-# Last pagerank_integer storage-level decision (same diagnostic
-# pattern as plans/pipeline.LAST_STAGE_SECONDS): scale_smoke logs and
-# tests read it to PROVE the adaptive DISK_ONLY branch fires at the
-# scale it exists for, instead of trusting the threshold by eye.
-LAST_PAGERANK_CHECKPOINT: dict[str, object] = {}
-
-
 @register("pagerank_integer", _PR_SQL)
 def pagerank_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer↔supplier bipartite graph (edges =
@@ -658,15 +651,10 @@ def pagerank_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet.
     n_li = li.count()
     big_graph = n_li > 5_000_000
-    # Decision record + stderr note: the branch only triggers above
-    # bench scale (sf0.1 is ~600k lineitem rows), so the 64x scale
-    # smoke's log is the evidence it actually fires — without a
-    # visible marker a silent mis-sizing (threshold typo, count on
-    # the wrong table) would look identical to the branch working.
-    LAST_PAGERANK_CHECKPOINT["lineitem_rows"] = n_li
-    LAST_PAGERANK_CHECKPOINT["level"] = (
-        "DISK_ONLY" if big_graph else "default"
-    )
+    # Stderr note: the branch only triggers above bench scale (sf0.1
+    # is ~600k lineitem rows); without a visible marker a silent
+    # mis-sizing (threshold typo, count on the wrong table) would look
+    # identical to the branch working.
     if big_graph:
         import sys
 

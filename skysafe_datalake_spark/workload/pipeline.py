@@ -242,14 +242,9 @@ def batch_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     flights_client, weather_client = fixture_clients(states_payload_columnar(pdf))
     tmp = tempfile.mkdtemp(prefix="skysafe_e2e_")
     try:
-        result = run_batch_pipeline(
-            spark,
-            LakeCatalog(tmp),
-            flights_client,
-            weather_client,
-            ts=FIXTURE_TS,
-        )
-        usage = spark.read.parquet(result.usage_path)
+        catalog = LakeCatalog(tmp)
+        run_batch_pipeline(spark, catalog, flights_client, weather_client, ts=FIXTURE_TS)
+        usage = spark.read.parquet(catalog.path("usage", "skysafe", "flights"))
         out = usage.select(
             F.col("icao24").cast("bigint").alias("flight_id"),
             "latitude",

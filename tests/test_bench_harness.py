@@ -1,12 +1,9 @@
-"""bench.py / scale_smoke.py harness behavior: the round-number file
-protocol, the CLI's one-line contract, and scale_smoke's refusal path
-(the last two on the session fixture)."""
+"""bench.py harness behavior: the round-number file protocol and the
+CLI's one-line contract (on the session fixture)."""
 
 from __future__ import annotations
 
 import os
-
-import pytest
 
 import bench
 
@@ -88,59 +85,3 @@ def test_main_prints_the_one_line_contract(spark, tmp_path, monkeypatch, capsys)
     assert len(last) < 2000
     assert os.listdir(tmp_path) == [line["detail_file"]] == ["BENCH_DETAIL_r01.json"]
 
-
-# ──────────────── scale_smoke over-scale refusal path ─────────────
-
-
-def test_scale_smoke_refusal_marks_and_continues(spark, monkeypatch):
-    """A query raising OverScaleRefusal in the warm pass is recorded
-    as refused (None) and the sweep times the remaining queries."""
-    import scale_smoke
-    from skysafe_datalake_spark.errors import OverScaleRefusal
-    from skysafe_datalake_spark.workload import QUERIES
-
-    def refuser(s, sf_dir):
-        raise OverScaleRefusal("fixture snapshot exceeds cap")
-
-    monkeypatch.setitem(QUERIES, "_smoke_refuser", refuser)
-    monkeypatch.setitem(QUERIES, "_smoke_ok", lambda s, sf_dir: s.range(5))
-    monkeypatch.setattr(
-        scale_smoke, "NAMES", ["_smoke_refuser", "_smoke_ok"]
-    )
-    out = scale_smoke.timed(spark, "unused-sf-dir")
-    assert out["_smoke_refuser"] is None
-    assert out["_smoke_ok"] is not None and out["_smoke_ok"] > 0
-
-
-def test_scale_smoke_genuine_valueerror_still_fails(spark, monkeypatch):
-    """Only the dedicated refusal type is a by-design refusal: a
-    plain ValueError (a real regression) must kill the sweep, not be
-    silently tabled as 'refused'."""
-    import scale_smoke
-    from skysafe_datalake_spark.workload import QUERIES
-
-    def broken(s, sf_dir):
-        raise ValueError("size parse regression")
-
-    monkeypatch.setitem(QUERIES, "_smoke_broken", broken)
-    monkeypatch.setattr(scale_smoke, "NAMES", ["_smoke_broken"])
-    with pytest.raises(ValueError, match="size parse regression"):
-        scale_smoke.timed(spark, "unused-sf-dir")
-
-
-def test_scale_smoke_unknown_query_exits_2():
-    """An all-typo subset must fail fast (exit 2) BEFORE paying for a
-    Spark session or the replicate step."""
-    import subprocess
-    import sys as _sys
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    p = subprocess.run(
-        [_sys.executable, "scale_smoke.py", "definitely_not_a_query"],
-        cwd=repo_root,
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert p.returncode == 2
-    assert "not in NAMES" in p.stderr

@@ -430,40 +430,35 @@ def test_windowed_event_counts_batch_parity(spark):
 def test_catalog_json_and_csv_round_trip(spark, tmp_path):
     """The raw layer is JSON in the reference (S4,
     /root/reference/src/helpers.py:161-190, written via boto3); here
-    Spark owns raw I/O end-to-end: JSON and CSV batches round-trip
-    through the partitioned catalog with values intact, and
-    read_latest prunes on partition columns for non-parquet formats
-    too."""
+    the catalog writes the raw bytes as one file and Spark reads them
+    back: JSON and CSV files round-trip through the partitioned
+    catalog with values intact."""
     from datetime import datetime, timezone
-
-    from pyspark.sql import functions as F
 
     from skysafe_datalake_spark.catalog import LakeCatalog
 
     cat = LakeCatalog(str(tmp_path / "lake"))
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", -3.25), (3, None, 0.0)],
-        "id LONG, name STRING, score DOUBLE",
-    )
+    ts = datetime(2026, 2, 26, 13, tzinfo=timezone.utc)
+    schema = "id LONG, name STRING, score DOUBLE"
+    want = {(1, "alpha", 1.5), (2, "beta", -3.25), (3, None, 0.0)}
 
-    cat.write(df, "raw", "api", "things", fmt="json",
-              ts=datetime(2026, 2, 26, 13, tzinfo=timezone.utc))
-    got_json = cat.read_latest(spark, "raw", "api", "things", fmt="json")
-    assert {
-        (r["id"], r["name"], r["score"])
-        for r in got_json.select("id", "name", "score").collect()
-    } == {(1, "alpha", 1.5), (2, "beta", -3.25), (3, None, 0.0)}
-
-    csv_opts = {"header": "true", "inferSchema": "true"}
-    cat.write(df, "raw", "api", "things_csv", fmt="csv", options={"header": "true"},
-              ts=datetime(2026, 2, 26, 13, tzinfo=timezone.utc))
-    got_csv = cat.read_latest(
-        spark, "raw", "api", "things_csv", fmt="csv", options=csv_opts
+    json_lines = (
+        '{"id":1,"name":"alpha","score":1.5}\n'
+        '{"id":2,"name":"beta","score":-3.25}\n'
+        '{"id":3,"name":null,"score":0.0}\n'
     )
-    assert {
-        (r["id"], r["name"], r["score"])
-        for r in got_csv.select("id", "name", "score").collect()
-    } == {(1, "alpha", 1.5), (2, "beta", -3.25), (3, None, 0.0)}
+    cat.write_file(spark, json_lines.encode(), "raw", "api", "things", ts=ts)
+    got_json = cat.read_latest(spark, "raw", "api", "things", fmt="json", schema=schema)
+
+    csv_lines = "1,alpha,1.5\n2,beta,-3.25\n3,,0.0\n"
+    cat.write_file(spark, csv_lines.encode(), "raw", "api", "things_csv", ts=ts)
+    got_csv = cat.read_latest(spark, "raw", "api", "things_csv", fmt="csv", schema=schema)
+
+    for got in (got_json, got_csv):
+        assert {
+            (r["id"], r["name"], r["score"])
+            for r in got.select("id", "name", "score").collect()
+        } == want
 
 
 def _ml_digest(df) -> tuple[str, list[str]]:

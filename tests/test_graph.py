@@ -172,7 +172,7 @@ def test_nn_join_null_distance_never_wins(spark):
     min(struct) a NULL first field sorts FIRST, so without the
     null-flag guard that one garbage row became EVERY left row's
     nearest neighbor (round-9 review). Both strategies must rank
-    nulls last."""
+    nulls last: argmin (k=1) and the window (k=2)."""
     from pyspark.sql import functions as F
 
     from skysafe_datalake_spark.functions.geo import haversine_km
@@ -188,13 +188,18 @@ def test_nn_join_null_distance_never_wins(spark):
         "sid long, s_lat double, s_lon double",
     )
     dist = haversine_km("lat", "lon", "s_lat", "s_lon")
-    for strategy in ("argmin", "window"):
-        row = nearest_neighbor_join(
-            left, right, ["fid"], dist,
-            tie_breakers=["sid"], strategy=strategy,
-        ).collect()[0]
-        assert row["sid"] == 100, strategy
-        assert row["dist_km"] is not None, strategy
+    row = nearest_neighbor_join(
+        left, right, ["fid"], dist, tie_breakers=["sid"]
+    ).collect()[0]
+    assert row["sid"] == 100
+    assert row["dist_km"] is not None
+    ranked = nearest_neighbor_join(
+        left, right, ["fid"], dist, k=2, tie_breakers=["sid"], rank_name="rank"
+    ).collect()
+    by_rank = {r["rank"]: r for r in ranked}
+    assert sorted(by_rank) == [1, 2]
+    assert by_rank[1]["sid"] == 100 and by_rank[1]["dist_km"] is not None
+    assert by_rank[2]["sid"] == 999
     # all-null candidates: the key still emits (with NULL distance)
     # on the argmin path rather than vanishing
     only_null = spark.createDataFrame(
@@ -204,29 +209,6 @@ def test_nn_join_null_distance_never_wins(spark):
         left, only_null, ["fid"], dist, tie_breakers=["sid"]
     ).collect()[0]
     assert row["sid"] == 999 and row["dist_km"] is None
-
-
-def test_pagerank_checkpoint_level_decision_recorded(spark):
-    """The adaptive DISK_ONLY checkpoint branch keys on >5M lineitem
-    rows — a scale no test fixture reaches, so the decision must be
-    observable (LAST_PAGERANK_CHECKPOINT + a stderr marker) for the
-    64x scale smoke to PROVE the branch fires instead of trusting
-    the threshold by eye. At sf0.001 the record must say default
-    level with the true row count."""
-    from tests.conftest import SF_SMALL
-
-    from skysafe_datalake_spark.workload import QUERIES
-    from skysafe_datalake_spark.workload.analytics import (
-        LAST_PAGERANK_CHECKPOINT,
-    )
-
-    QUERIES["pagerank_integer"](spark, SF_SMALL).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    n = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").count()
-    assert LAST_PAGERANK_CHECKPOINT["lineitem_rows"] == n
-    assert n <= 5_000_000
-    assert LAST_PAGERANK_CHECKPOINT["level"] == "default"
 
 
 def test_pagerank_leaves_no_session_cache_residue(spark):

@@ -105,9 +105,7 @@ def test_batch_pipeline_materializes_all_layers(spark, tmp_path):
     flights_client, weather_client = fixture_clients(states_payload(_rows(60)))
     cat = LakeCatalog(str(tmp_path / "lake"))
     t0 = _time.perf_counter()
-    result = run_batch_pipeline(
-        spark, cat, flights_client, weather_client, ts=FIXTURE_TS, with_counts=True
-    )
+    result = run_batch_pipeline(spark, cat, flights_client, weather_client, ts=FIXTURE_TS)
     total = _time.perf_counter() - t0
 
     # Per-stage wall attribution: every DAG stage records a positive
@@ -124,7 +122,6 @@ def test_batch_pipeline_materializes_all_layers(spark, tmp_path):
         "format_weather",
         "combine",
         "usage",
-        "counts",  # with_counts=True
     }
     assert set(result.stage_seconds) == expected_stages
     assert all(s >= 0 for s in result.stage_seconds.values())
@@ -136,17 +133,16 @@ def test_batch_pipeline_materializes_all_layers(spark, tmp_path):
     s = result.stage_seconds
     flights_leg = s["extract_flights"] + s["format_flights"]
     weather_leg = s["extract_weather"] + s["format_weather"]
-    spine = max(flights_leg, weather_leg) + s["combine"] + s["usage"] + s["counts"]
+    spine = max(flights_leg, weather_leg) + s["combine"] + s["usage"]
     assert spine <= total + 0.05
-    # scale_smoke.py reads the module-level copy for the e2e row
-    from skysafe_datalake_spark.plans import pipeline as plans_pipeline
 
-    assert plans_pipeline.LAST_STAGE_SECONDS == result.stage_seconds
-
-    assert result.counts["formatted_flights"] == 60
-    assert result.counts["formatted_weather"] == 6
-    assert result.counts["enriched"] == 60
-    assert result.counts["usage"] == 60
+    layers = (
+        ("formatted", "opensky", "flights"),
+        ("formatted", "open_meteo", "weather"),
+        ("enriched", "skysafe", "flights"),
+        ("usage", "skysafe", "flights"),
+    )
+    assert [cat.read_latest(spark, *layer).count() for layer in layers] == [60, 6, 60, 60]
 
     # raw layer holds the verbatim payload documents
     raw = cat.read_latest(spark, "raw", "opensky", "flights", fmt="text")
@@ -809,19 +805,44 @@ def _fields(schema):
     return [(f.name, f.dataType, f.nullable) for f in schema]
 
 
-def test_recorded_schema_reads_like_inference(spark, tmp_path):
-    """The formatted-weather schema ``run_minute`` reads with equals
-    the schema Spark infers from what ``format_weather_stage`` wrote,
-    and the read with it starts no job. Both reads give the same
-    partition-column types and rows."""
-    from skysafe_datalake_spark.plans.pipeline import formatted_weather_schema
+def test_recorded_schema_reads_like_inference(spark, tmp_path, monkeypatch):
+    """The formatted-weather schema ``run_minute`` reads with is derived
+    once: across two minutes ``openmeteo.format_weather`` runs once for
+    it. It equals the schema Spark infers from what
+    ``format_weather_stage`` wrote, and the read with it starts no job.
+    Both reads give the same partition-column types and rows."""
+    from skysafe_datalake_spark.plans import pipeline as plans_pipeline
+    from skysafe_datalake_spark.sources import openmeteo, opensky
 
-    _, weather_client = fixture_clients(states_payload([]))
+    flights_client, weather_client = fixture_clients(states_payload(_rows(10)))
     cat = LakeCatalog(str(tmp_path / "lake"))
     ingest.extract_weather(spark, cat, weather_client, ts=FIXTURE_TS)
     format_weather_stage(spark, cat, ts=FIXTURE_TS)
+    ingest.extract_flights(spark, cat, flights_client, ts=FIXTURE_TS)
+    raw = cat.read_latest(spark, "raw", "opensky", "flights", fmt="json", schema=opensky.RAW_SCHEMA)
     layer = ("formatted", "open_meteo", "weather")
-    schema = formatted_weather_schema(spark)
+
+    derivations, schemas = [], []
+    format_weather, read_latest = openmeteo.format_weather, cat.read_latest
+
+    def counting_format(df):
+        derivations.append(df)
+        return format_weather(df)
+
+    def recording_read(s, *args, schema=None, **kwargs):
+        if args == layer:
+            schemas.append(schema)
+        return read_latest(s, *args, schema=schema, **kwargs)
+
+    monkeypatch.setattr(openmeteo, "format_weather", counting_format)
+    monkeypatch.setattr(cat, "read_latest", recording_read)
+    plans_pipeline.formatted_weather_schema.cache_clear()
+    for minute in range(2):
+        plans_pipeline.run_minute(spark, cat, raw, ts=FIXTURE_TS + timedelta(minutes=minute))
+    monkeypatch.undo()
+    assert len(derivations) == 1
+    assert len(schemas) == 2 and schemas[0] is schemas[1]
+    schema = schemas[0]
     named, jobs = _jobs_in_group(
         spark, "test-recorded-weather", lambda: cat.read_latest(spark, *layer, schema=schema)
     )
@@ -1105,25 +1126,6 @@ def test_kibana_provisioning_flow(tmp_path):
         kibana.import_dashboard(
             never_ready, nd, sleep=lambda s: None
         )
-
-
-def test_catalog_orc_round_trip(spark, tmp_path):
-    """The catalog is format-agnostic: ORC (columnar, built-in)
-    round-trips with values intact and latest-partition pruning, same
-    as parquet/JSON/CSV — a lake can mix formats per entity."""
-    from datetime import datetime, timezone
-
-    cat = LakeCatalog(str(tmp_path / "lake"))
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, None, -3.25)], "id LONG, name STRING, score DOUBLE"
-    )
-    cat.write(df, "formatted", "api", "things", fmt="orc",
-              ts=datetime(2026, 2, 26, 13, tzinfo=timezone.utc))
-    got = cat.read_latest(spark, "formatted", "api", "things", fmt="orc")
-    assert {
-        (r["id"], r["name"], r["score"])
-        for r in got.select("id", "name", "score").collect()
-    } == {(1, "alpha", 1.5), (2, None, -3.25)}
 
 
 def test_latest_per_key_null_ts_loses_and_subsecond_wins(spark):
